@@ -24,6 +24,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import append_job_description
 from ..utils import (
     LocalCheckpointCycler,
     UnpersistHandle,
@@ -605,97 +606,74 @@ def _cc_label_propagation(
 ) -> DataFrame:
     """Min-label propagation over persisted symmetric edges ``sym``
     (columns ``src``, ``dst``, hash-partitioned on ``src`` by the
-    caller).  Labels are monotone non-increasing, so "converged" ==
-    "no row got a strictly smaller label this batch".
+    caller), which hold one self-loop ``(v, v)`` per node.  Labels are
+    monotone non-increasing, so "converged" == "no row got a strictly
+    smaller label this batch".
 
-    Step shape (round 11): neighbour contributions and the node's own
-    state meet in ONE union + min-aggregate keyed by node id — the
-    former join-back of the neighbour minima onto the label frame was a
-    second edge-adjacent exchange per step.  The label state arrives at
-    each step's join hash-partitioned on ``id`` from the previous
-    aggregate, and ``sym`` is pre-partitioned on ``src``, so the
-    labels-onto-edges join itself moves nothing: ONE exchange per step
-    (the union aggregate).  The reference labels (``__old``) ride the
-    aggregate as ``max`` over a column only the self branch populates —
-    exactly one non-null per id.
+    Step shape (round 14): ``sym ⋈ labels on src``, then ``min(label)``
+    grouped by ``dst`` — one join and one aggregate.  The self-loop
+    hands each node its own previous label through the same join, so a
+    step reads the previous state ONCE and a batch of k steps
+    references the edge cache k times.  (Reading the state twice per
+    step — once for the neighbours, once for the node itself — doubles
+    the plan per step: 63 edge-cache references at 5 steps, and seconds
+    of driver planning per batch.)  Step 1 needs no seed frame: every
+    label starts as the node's own id, so it is ``min(src)`` grouped by
+    ``dst``.
 
     Convergence is judged on the batch's LAST step alone (round 13):
-    ``__old`` is re-stamped to the second-to-last state's labels, so
-    ``changed == 0`` means the final step was a no-op — and monotone
-    labels make a single no-op step a fixpoint proof, the same theorem
-    the whole-batch comparison used.  The former batch-start ``__old``
-    needed one FULLY no-op batch to exit: a graph whose diameter d
-    satisfies d ≡ check_every - 1 (mod check_every) paid one extra
-    batch job purely to observe zero change (the near-dup gate shape,
-    d = 2, paid 2 batch jobs where 1 suffices).  Batch jobs are now
-    exactly ``ceil((d + 1) / check_every)`` and total steps unchanged.
+    that step also keeps ``__old``, the label its self-loop carried in
+    (exactly one non-null per id), so ``changed == 0`` means the final
+    step was a no-op — and monotone labels make a single no-op step a
+    fixpoint proof.  Batch jobs are ``ceil((d + 1) / check_every)`` for
+    a graph of diameter d.  A null id links nothing: its row takes the
+    min of its neighbours' previous labels and has no ``__old``, so it
+    is final as soon as they are and never counts as a change.
 
     Convergence is read from an :class:`~pyspark.sql.Observation` bound
-    to the batch's checkpoint materialization job — the former separate
-    ``count()`` action per batch re-scanned the checkpointed labels
-    (verified: eager ``localCheckpoint`` fulfills observe metrics; the
+    to the batch's checkpoint materialization job (verified: eager
+    ``localCheckpoint`` fulfills observe metrics; the
     one-job-per-batch shape is pinned by test).
 
-    Each batch ends in ``localCheckpoint(eager=True)``: iterative plans
-    reference the previous state 2× per step, so without lineage
-    truncation the logical plan grows as 2^steps and driver-side plan
-    analysis OOMs long before the data does.  (``persist`` caches data
-    but keeps the full lineage — it does NOT prevent this.)  The
-    ``cycler`` frees each superseded checkpoint generation as the next
-    one lands (each batch reads only the previous labels, so lag 1),
-    keeping live checkpoint storage at one generation instead of
-    one-per-round.  The seed labels are NOT checkpointed: distinct
-    ``src`` over the pre-partitioned ``sym`` is exchange-free and folds
-    into batch 1's single materialization job."""
+    Each batch ends in ``localCheckpoint(eager=True)``: the plan is
+    linear in the step count, but without lineage truncation it would
+    still grow with every batch, and so would the lineage a task
+    failure recomputes.  (``persist`` caches data but keeps the full
+    lineage.)  The ``cycler`` frees each superseded checkpoint
+    generation as the next one lands (each batch reads only the
+    previous labels, so lag 1)."""
     from pyspark.sql import Observation
 
     ck = cycler.checkpoint if cycler is not None else (
         lambda df: df.localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    old_type = labels.schema["label"].dataType
+    labels = None
     steps_done = 0
     while steps_done < max_iterations:
         batch = min(check_every, max_iterations - steps_done)
         # compose `batch` propagation steps lazily; one job materializes
         # the whole batch at the checkpoint below
-        stepped = labels.withColumn("__old", F.col("label"))
         for i in range(batch):
-            if i == batch - 1 and batch > 1:
-                # re-stamp the reference labels so the Observation
-                # counts only the LAST step's changes (docstring)
-                stepped = stepped.select(
-                    "id", "label", F.col("label").alias("__old")
+            if labels is None:  # step 1: each label starts as the node id
+                edges = sym.withColumn("label", F.col("src"))
+            else:
+                # left: a null src matches no label, and the (null, null)
+                # self-loop keeps a null id's row (min ignores the null)
+                edges = sym.join(
+                    labels.select(F.col("id").alias("src"), "label"), "src", "left"
                 )
-            contrib = sym.join(
-                stepped.select(F.col("id").alias("src"), "label"), "src"
-            ).select(
-                F.col("dst").alias("id"),
-                "label",
-                F.lit(None).cast(old_type).alias("__old"),
-            )
-            stepped = (
-                contrib.unionByName(stepped)
-                .groupBy("id")
-                .agg(F.min("label").alias("label"), F.max("__old").alias("__old"))
-            )
+            aggs = [F.min("label").alias("label")]
+            if i == batch - 1:
+                own = F.when(F.col("src") == F.col("dst"), F.col("label"))
+                aggs.append(F.max(own).alias("__old"))
+            labels = edges.groupBy(F.col("dst").alias("id")).agg(*aggs)
         obs = Observation()
-        stepped = ck(
-            stepped.observe(
-                obs,
-                F.count(F.when(F.col("label") < F.col("__old"), 1)).alias(
-                    "changed"
-                ),
-            )
-        )
-        changed = obs.get["changed"]
-        labels = stepped
+        changed = F.count(F.when(F.col("label") < F.col("__old"), 1))
+        n = steps_done // check_every + 1
+        with append_job_description(f"connected_components:batch{n}"):
+            labels = ck(labels.observe(obs, changed.alias("changed")))
         steps_done += batch
-        if changed == 0:
+        if obs.get["changed"] == 0:
             _record_cc_stats("label", steps_done, max_iterations)
             return labels.select("id", F.col("label").alias("cluster_id"))
     _record_cc_stats("label", max_iterations, max_iterations, converged=False)
@@ -820,9 +798,11 @@ def connected_components(
     at the cost of at most 2 no-op steps past the fixpoint — on a
     diameter-heavy graph prefer a larger ``check_every`` (fewer driver
     syncs) or ``algorithm='star'``.  Iteration state is
-    ``localCheckpoint``-ed to truncate lineage (exponential-plan
-    guard); on a fault-tolerance-critical cluster job, set a checkpoint
-    dir and swap in reliable ``checkpoint()``.
+    ``localCheckpoint``-ed once per batch to keep lineage bounded; on a
+    fault-tolerance-critical cluster job, set a checkpoint dir and swap
+    in reliable ``checkpoint()``.  Every job this algorithm launches
+    carries the description ``connected_components:edges``,
+    ``:batch{i}`` or ``:result``, appended to the caller's own.
 
     ``algorithm='star'``: alternating large-star / small-star
     contraction, O(log^2 n) rounds on any graph — use for adversarial
@@ -863,15 +843,19 @@ def connected_components(
     # persist+count of the forward edges so its two branches would not
     # re-run the pair generation; the explode form reads it exactly
     # once inside sym's own forcing action — one cache and one job
-    # fewer per call.  Hash-partitioned on src ONCE: every label step
-    # joins on src, and the seed distinct + per-step joins are then
-    # exchange-free (an arbitrary layout would reshuffle the full edge
-    # list into the join EVERY step).
+    # fewer per call.  Each edge also yields the self-loops (src, src)
+    # and (dst, dst): a label step then carries every node's own label
+    # through the same join as its neighbours' (one join + one
+    # aggregate per step, a plan linear in the step count — see
+    # _cc_label_propagation); _cc_star drops them with its src != dst
+    # filter.  Hash-partitioned on src ONCE: every label step joins on
+    # src (an arbitrary layout would reshuffle the full edge list into
+    # the join EVERY step).
     both_dirs = F.explode(
-        F.array(
-            F.struct(F.col(src).alias("src"), F.col(dst).alias("dst")),
-            F.struct(F.col(dst).alias("src"), F.col(src).alias("dst")),
-        )
+        F.array(*[
+            F.struct(F.col(a).alias("src"), F.col(b).alias("dst"))
+            for a, b in ((src, dst), (dst, src), (src, src), (dst, dst))
+        ])
     )
     # the edge dedup rides the src repartition: hash(src) collocates
     # every (src, dst) group, so dropDuplicates fuses onto that one
@@ -888,7 +872,8 @@ def connected_components(
         .dropDuplicates(["src", "dst"])
         .persist()
     )
-    sym.count()  # force once: later consumers read the warm cache
+    with append_job_description("connected_components:edges"):
+        sym.count()  # force once: later consumers read the warm cache
     spark = edges.sparkSession
     cycler = None
     ok = False
@@ -909,7 +894,8 @@ def connected_components(
         out = out.persist()
         if unpersist_handle is not None:
             unpersist_handle.add_dataframe(out)
-        out.count()
+        with append_job_description("connected_components:result"):
+            out.count()
         ok = True
         return out
     finally:

@@ -113,11 +113,14 @@ def _string_pairs(
     # fixed overhead of a cluster-wide fan-out, with no silent
     # data-dependent shape switch.  Default: the session's shuffle
     # partitions (scale-adaptive).
-    n_parts = (
-        int(variant_partitions)
-        if variant_partitions
-        else session_shuffle_partitions(left_strings.sparkSession)
-    )
+    if variant_partitions is None:
+        n_parts = session_shuffle_partitions(left_strings.sparkSession)
+    elif variant_partitions < 1:
+        raise ValueError(
+            f"variant_partitions must be >= 1, got {variant_partitions}"
+        )
+    else:
+        n_parts = int(variant_partitions)
     lv = left_strings.repartition(n_parts).select(
         F.col("__ls"), F.explode(deletion_variants("__ls", max_distance)).alias("__variant")
     )

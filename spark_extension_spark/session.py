@@ -12,6 +12,7 @@ import tempfile
 from contextlib import contextmanager
 from typing import Callable, TypeVar
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 __all__ = [
@@ -27,14 +28,23 @@ __all__ = [
 T = TypeVar("T")
 
 
+def _context() -> SparkContext:
+    # the process's context, not SparkSession.getActiveSession(): a
+    # driver thread other than the one that built the session has no
+    # active session, and job descriptions live on the context anyway
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        raise RuntimeError("job descriptions need a running SparkContext")
+    return sc
+
+
 @contextmanager
 def job_description(description: str, if_not_set: bool = False):
     """Set the Spark job description for the duration of the block.
 
     With ``if_not_set=True`` an existing description is kept.
     """
-    spark = SparkSession.getActiveSession()
-    sc = spark.sparkContext
+    sc = _context()
     previous = sc.getLocalProperty("spark.job.description")
     if previous is None or not if_not_set:
         sc.setJobDescription(description)
@@ -47,8 +57,7 @@ def job_description(description: str, if_not_set: bool = False):
 @contextmanager
 def append_job_description(extra: str, separator: str = " - "):
     """Append ``extra`` to the current job description for the block."""
-    spark = SparkSession.getActiveSession()
-    sc = spark.sparkContext
+    sc = _context()
     previous = sc.getLocalProperty("spark.job.description")
     combined = f"{previous}{separator}{extra}" if previous else extra
     sc.setJobDescription(combined)

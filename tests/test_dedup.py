@@ -232,6 +232,177 @@ def test_connected_components_stats_log(spark):
     }
 
 
+def _union_find_labels(edges):
+    """Reference labels: component minimum per node.  A null id links
+    nothing; its label is the smallest label among its non-null
+    neighbours (None when it has none)."""
+    parent = {}
+
+    def find(v):
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        for v in (a, b):
+            if v is not None:
+                parent.setdefault(v, v)
+        if a is not None and b is not None:
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+    got = {v: find(v) for v in parent}
+    null_nbrs = [
+        got[o] for a, b in edges for n, o in ((a, b), (b, a))
+        if n is None and o is not None
+    ]
+    if any(None in e for e in edges):
+        got[None] = min(null_nbrs) if null_nbrs else None
+    return got
+
+
+def _label_steps(edges, labels):
+    """Steps min-label propagation needs on a null-free graph: the
+    largest hop distance from any node to its component minimum."""
+    nbrs = {}
+    for a, b in edges:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    far = 0
+    for root in set(labels.values()):
+        dist, frontier = {root: 0}, [root]
+        while frontier:
+            nxt = []
+            for v in frontier:
+                for w in nbrs[v] - dist.keys():
+                    dist[w] = dist[v] + 1
+                    nxt.append(w)
+            frontier = nxt
+        far = max(far, max(dist.values()))
+    return far
+
+
+def _random_multigraph(seed):
+    import random
+
+    rng = random.Random(seed)
+    ids = rng.sample(range(1000), 30)
+    edges = [tuple(rng.sample(ids, 2)) for _ in range(18)]
+    chain = sorted(rng.sample(range(1000, 2000), rng.randint(2, 8)), reverse=True)
+    edges += list(zip(chain, chain[1:]))  # the minimum sits at one end
+    edges += [(b, a) for a, b in rng.sample(edges, 4)]  # both directions
+    edges += rng.sample(edges, 4)  # repeated edges
+    edges += [(v, v) for v in rng.sample(ids, 3) + [2000 + seed]]  # self-loops
+    rng.shuffle(edges)
+    return edges
+
+
+def test_connected_components_match_union_find(spark):
+    # seeded random multigraphs (repeated and reversed edges, input
+    # self-loops, a node that only loops to itself, chains longer than
+    # a batch): labels equal a union-find reference at every batch size,
+    # equal the star algorithm, and the label loop stops at the first
+    # batch whose last step is a no-op
+    from spark_extension_spark import connected_components
+    from spark_extension_spark.operators.dedup import cc_stats_log
+
+    def run(edges, schema, **kw):
+        df = spark.createDataFrame(edges, schema)
+        out = connected_components(df, warn_single_use=False, **kw)
+        return {r["id"]: r["cluster_id"] for r in out.collect()}
+
+    for seed in range(6):
+        edges = _random_multigraph(seed)
+        want = _union_find_labels(edges)
+        steps = _label_steps(edges, want)
+        for check_every in (1, 2, 3):
+            cc_stats_log(clear=True)
+            assert run(edges, "id_a long, id_b long", check_every=check_every) == want
+            (entry,) = cc_stats_log(clear=True)
+            batches = -(-(steps + 1) // check_every)
+            assert entry["iterations"] == batches * check_every, (seed, check_every)
+        star = run(edges, "id_a long, id_b long", algorithm="star")
+        assert star == want, seed
+
+    # string ids: the same loop, ordered as strings
+    words = [("m", "k"), ("k", "c"), ("c", "c"), ("x", "q"), ("q", "x"), ("z", "z")]
+    for check_every in (1, 2, 3):
+        got = run(words, "id_a string, id_b string", check_every=check_every)
+        assert got == _union_find_labels(words)
+    # a null id links nothing and takes its neighbours' smallest label
+    # (the star algorithm gives it a null label instead, so it is not
+    # compared here)
+    nulls = [(5, 4), (4, 3), (None, 5), (9, None), (9, 8), (None, None), (7, 7)]
+    for check_every in (1, 2, 3):
+        got = run(nulls, "id_a long, id_b long", check_every=check_every)
+        assert got == _union_find_labels(nulls) == {
+            3: 3, 4: 3, 5: 3, 7: 7, 8: 8, 9: 8, None: 3
+        }
+    assert run([(None, None)], "id_a long, id_b long") == {None: None}
+
+
+@pytest.mark.parametrize("check_every", [3, 5])
+def test_connected_components_batch_plan_linear(spark, monkeypatch, check_every):
+    # each label step reads the previous state once (self-looped edges),
+    # so a batch of k steps references the edge cache k times; the
+    # former union-based step doubled it per step (15 at k=3, 63 at k=5)
+    from spark_extension_spark.operators import dedup
+
+    refs = []
+
+    class Recording(dedup.LocalCheckpointCycler):
+        def checkpoint(self, df):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            refs.append(plan.count("InMemoryRelation"))
+            return super().checkpoint(df)
+
+    monkeypatch.setattr(dedup, "LocalCheckpointCycler", Recording)
+    # a 12-node chain: 12 steps to converge, so several batches
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], ["id_a", "id_b"]
+    )
+    out = dedup.connected_components(
+        edges, check_every=check_every, warn_single_use=False
+    )
+    assert {r["cluster_id"] for r in out.collect()} == {0}
+    assert refs == [check_every] * -(-12 // check_every)
+
+
+def test_connected_components_job_labels(spark):
+    # every job the label loop launches names its phase; the caller's
+    # description stays as the prefix
+    from spark_extension_spark import connected_components
+    from spark_extension_spark.session import job_description
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def job_descriptions():
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        out = {}
+        for i in range(jobs.size()):
+            job = jobs.apply(i)
+            d = job.description()
+            out[job.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    before = set(job_descriptions())
+    # diameter 4 at check_every=2: converges in the third batch
+    edges = spark.createDataFrame(
+        [(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"]
+    )
+    with job_description("caller"):
+        connected_components(edges, check_every=2, warn_single_use=False)
+    labels = {
+        d for j, d in job_descriptions().items() if j not in before
+    }
+    assert labels == {
+        f"caller - connected_components:{phase}"
+        for phase in ("edges", "batch1", "batch2", "batch3", "result")
+    }
+
+
 def test_connected_components_unpersist_handle(spark):
     from spark_extension_spark import connected_components
     from spark_extension_spark.utils import UnpersistHandle

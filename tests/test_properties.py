@@ -188,6 +188,31 @@ def test_fuzzy_join_hint_paths_agree_and_typos_rejected(spark):
         fuzzy_join_levenshtein(df, df, "s", "s", 1, join_hint="shuffle")
 
 
+def test_fuzzy_variant_partitions_validated(spark):
+    # 0 is a bad width, not "unset", and a negative one must fail at the
+    # call instead of deep inside Spark's repartition
+    import pytest
+
+    from spark_extension_spark.operators.fuzzy import (
+        fuzzy_dedup_pairs,
+        fuzzy_join_levenshtein,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "abc"), (2, "abd"), (3, "xyz")], "id int, s string"
+    )
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="variant_partitions must be >= 1"):
+            fuzzy_dedup_pairs(df, "id", "s", 1, variant_partitions=bad)
+        with pytest.raises(ValueError, match="variant_partitions must be >= 1"):
+            fuzzy_join_levenshtein(df, df, "s", "s", 1, variant_partitions=bad)
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in fuzzy_dedup_pairs(df, "id", "s", 1, variant_partitions=1).collect()
+    }
+    assert got == {(1, 2)}
+
+
 @given(values=st.lists(st.integers(min_value=0, max_value=30), max_size=40))
 @SETTINGS
 def test_kmv_exact_below_capacity(spark, values):

@@ -39,6 +39,24 @@ def test_append_job_description(spark):
         assert _description(spark) == "base"
 
 
+def test_job_description_from_worker_thread(spark):
+    # a driver thread other than the session's builder has no active
+    # session; the helpers must still label that thread's jobs
+    import threading
+
+    seen = []
+
+    def work():
+        with job_description("worker"):
+            with append_job_description("step"):
+                seen.append(_description(spark))
+
+    t = threading.Thread(target=work)
+    t.start()
+    t.join()
+    assert seen == ["worker - step"]
+
+
 def test_create_temporary_dir(spark):
     import os
 
