@@ -710,46 +710,48 @@ def _cc_star(
         lambda df: df.localCheckpoint(eager=True)
     )
     # high→low orientation; drop self-loops
-    work = ck(
-        sym.where(F.col("src") != F.col("dst"))
-        .select(
-            F.greatest("src", "dst").alias("u"),
-            F.least("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
-    nodes = sym.select(F.col("src").alias("id")).distinct()
-    for round_ in range(max_iterations):
-        # -- large-star: for every node n, connect strictly-larger
-        #    neighbours to m(n) = min over Γ(n) ∪ {n}
-        nbrs = work.union(work.select(F.col("v").alias("u"),
-                                      F.col("u").alias("v")))
-        mins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("__mv"))
-            .select("u", F.least("__mv", "u").alias("m"))
-        )
-        large = (
-            nbrs.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        )
-        # -- small-star on the large-star output (still high→low):
-        #    connect all ≤ neighbours (and self) of n to the minimum
-        lg = ck(large.where(F.col("u") != F.col("v")).distinct())
-        smins = lg.groupBy("u").agg(F.min("v").alias("m"))
-        small = ck(
-            lg.join(smins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(smins.select("u", F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
+    with append_job_description("connected_components:star0"):
+        work = ck(
+            sym.where(F.col("src") != F.col("dst"))
+            .select(
+                F.greatest("src", "dst").alias("u"),
+                F.least("src", "dst").alias("v"),
+            )
             .distinct()
         )
-        # converged when the edge set is stable (star edges fixed)
-        delta = (
-            small.join(work, ["u", "v"], "left_anti").limit(1).count()
-            + work.join(small, ["u", "v"], "left_anti").limit(1).count()
-        )
+    nodes = sym.select(F.col("src").alias("id")).distinct()
+    for round_ in range(max_iterations):
+        with append_job_description(f"connected_components:star{round_ + 1}"):
+            # -- large-star: for every node n, connect strictly-larger
+            #    neighbours to m(n) = min over Γ(n) ∪ {n}
+            nbrs = work.union(work.select(F.col("v").alias("u"),
+                                          F.col("u").alias("v")))
+            mins = (
+                nbrs.groupBy("u")
+                .agg(F.min("v").alias("__mv"))
+                .select("u", F.least("__mv", "u").alias("m"))
+            )
+            large = (
+                nbrs.join(mins, "u")
+                .where(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            )
+            # -- small-star on the large-star output (still high→low):
+            #    connect all ≤ neighbours (and self) of n to the minimum
+            lg = ck(large.where(F.col("u") != F.col("v")).distinct())
+            smins = lg.groupBy("u").agg(F.min("v").alias("m"))
+            small = ck(
+                lg.join(smins, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .union(smins.select("u", F.col("m").alias("v")))
+                .where(F.col("u") != F.col("v"))
+                .distinct()
+            )
+            # converged when the edge set is stable (star edges fixed)
+            delta = (
+                small.join(work, ["u", "v"], "left_anti").limit(1).count()
+                + work.join(small, ["u", "v"], "left_anti").limit(1).count()
+            )
         work = small
         if delta == 0:
             _record_cc_stats("star", round_ + 1, max_iterations)
@@ -807,6 +809,8 @@ def connected_components(
     ``algorithm='star'``: alternating large-star / small-star
     contraction, O(log^2 n) rounds on any graph — use for adversarial
     long-chain graphs where diameter-many label steps would be slow.
+    Its jobs are labelled ``:edges``, ``:star0`` (orienting the edge
+    set), ``:star{r}`` for round r, and ``:result``.
 
     The (possibly expensive) upstream ``edges`` pipeline is read
     exactly once: symmetrization explodes each edge into both

@@ -1,20 +1,29 @@
-"""Partitioned writing with few, sorted, evenly-sized files.
+"""Partitioned writing with few, sorted files.
 
 Parity: reference src/main/scala/uk/co/gresearch/spark/package.scala:717-768
 (``writePartitionedBy``).  Plain ``df.write.partitionBy(cols)`` writes one
 file per (task, partition-value) pair — at 1000 executors that is up to
 1000 small files *per partition directory*.  This operator instead
-range-partitions by the partition columns (plus optional file columns) so
-each output file covers a contiguous key range, then sorts within
+clusters rows by the partition columns (plus optional file columns) so
+each partition value lands in as few tasks as possible, then sorts within
 partitions so files are internally ordered:
 
-    df.repartitionByRange([n,] partCols ++ fileCols)
+    df.repartition([n,] partCols)                     # no file columns
+    df.repartitionByRange([n,] partCols ++ fileCols)  # with file columns
       .sortWithinPartitions(partCols ++ fileCols ++ fileOrder)
       .write.partitionBy(partCols)
 
-Range partitioning samples the key distribution, so output files stay
-evenly sized even under heavy key skew — the property that matters at
-100 TB.  Targeting Spark ≥ 3.5: the SPARK-40588 AQE cache workaround the
+Without file columns, both exchanges send every row of one partition
+value to one task, so each partition directory gets exactly one file.
+The hash exchange is used there because a range exchange first runs a
+sampling job over its input to compute its bounds, and that job
+re-executes the whole upstream stage (a Python UDF upstream runs twice).
+Neither exchange evens out file sizes under key skew: one hot partition
+value is one file either way.  File columns are where range partitioning
+matters: it splits one partition value into several files that each
+cover a contiguous, non-overlapping range of the file columns.
+
+Targeting Spark ≥ 3.5: the SPARK-40588 AQE cache workaround the
 reference carries for Spark ≤ 3.3.1 is unnecessary; ``unpersist_handle``
 is accepted for API parity and set to a no-op frame.
 """
@@ -73,16 +82,15 @@ def write_partitioned_by(
     partition_names = [n for n, _ in partition_tagged]
     file_names = [n for n, _ in file_tagged]
 
-    range_cols = [F.col(backticks(c)) for c in partition_names + file_names]
-    ranged = (
-        prepared.repartitionByRange(*range_cols)
-        if partitions is None
-        else prepared.repartitionByRange(partitions, *range_cols)
+    layout_cols = [F.col(backticks(c)) for c in partition_names + file_names]
+    exchange = prepared.repartitionByRange if file_names else prepared.repartition
+    shuffled = (
+        exchange(*layout_cols) if partitions is None else exchange(partitions, *layout_cols)
     )
-    sort_cols = range_cols + [
+    sort_cols = layout_cols + [
         F.col(backticks(c)) if isinstance(c, str) else c for c in more_file_order
     ]
-    laid_out = ranged.sortWithinPartitions(*sort_cols)
+    laid_out = shuffled.sortWithinPartitions(*sort_cols)
 
     if written_projection is not None:
         laid_out = laid_out.select(*written_projection)

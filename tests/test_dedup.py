@@ -402,6 +402,26 @@ def test_connected_components_job_labels(spark):
         for phase in ("edges", "batch1", "batch2", "batch3", "result")
     }
 
+    # the star algorithm names its orientation job star0, then one
+    # label per contraction round
+    from spark_extension_spark import cc_stats_log
+
+    cc_stats_log(clear=True)
+    before = set(job_descriptions())
+    with job_description("caller"):
+        connected_components(edges, algorithm="star", warn_single_use=False)
+    (stats,) = cc_stats_log(clear=True)
+    rounds = stats["iterations"]
+    assert rounds >= 2
+    labels = {
+        d for j, d in job_descriptions().items() if j not in before
+    }
+    assert labels == {
+        f"caller - connected_components:{phase}"
+        for phase in ["edges", "result"]
+        + [f"star{r}" for r in range(rounds + 1)]
+    }
+
 
 def test_connected_components_unpersist_handle(spark):
     from spark_extension_spark import connected_components

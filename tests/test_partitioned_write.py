@@ -20,7 +20,7 @@ def test_write_layout(df, tmp_path):
     write_partitioned_by(df, ["bucket"]).parquet(path)
     dirs = sorted(os.path.basename(p) for p in glob.glob(f"{path}/bucket=*"))
     assert dirs == ["bucket=0", "bucket=1", "bucket=2"]
-    # range partitioning by bucket: each partition dir holds few files
+    # clustered by bucket: each partition dir holds few files
     for d in dirs:
         files = glob.glob(f"{path}/{d}/*.parquet")
         assert 1 <= len(files) <= 2
@@ -95,3 +95,57 @@ def test_string_column_named_like_expression_is_accepted(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="must be named"):
         write_partitioned_by(df, [F.col("id") % 3])
+
+
+def test_write_runs_upstream_once(df, tmp_path, spark):
+    # without file columns the layout exchange is a hash exchange: a
+    # range exchange's bound-sampling job would run the upstream Python
+    # UDF over every row a second time
+    acc = spark.sparkContext.accumulator(0)
+
+    def tag(v):
+        acc.add(1)
+        return v.upper()
+
+    tagged = df.withColumn("tag", F.udf(tag, "string")("v"))
+    path = str(tmp_path / "once")
+    write_partitioned_by(tagged, ["bucket"], more_file_order=["id"]).parquet(path)
+    assert acc.value == 300
+    assert spark.read.parquet(path).count() == 300
+
+
+@pytest.mark.parametrize("partitions", [None, 2])
+def test_write_one_sorted_file_per_partition_value(spark, tmp_path, partitions):
+    # heavy skew: bucket 0 holds 90% of the rows, and still one file
+    rows = [(i, 0 if i % 10 else 1 + i % 3) for i in range(400)]
+    skewed = spark.createDataFrame(rows, ["id", "bucket"]).repartition(8)
+    path = str(tmp_path / "one")
+    write_partitioned_by(
+        skewed, ["bucket"], more_file_order=[F.col("id").desc()],
+        partitions=partitions,
+    ).parquet(path)
+    dirs = glob.glob(f"{path}/bucket=*")
+    assert len(dirs) == 4
+    for d in dirs:
+        (f,) = glob.glob(f"{d}/*.parquet")
+        ids = [r["id"] for r in spark.read.parquet(f).collect()]
+        assert ids == sorted(ids, reverse=True)
+
+
+def test_write_file_columns_split_into_disjoint_ranges(df, tmp_path, spark):
+    # file columns keep the range exchange: a partition value spread
+    # over several files gives each a contiguous, disjoint id range
+    path = str(tmp_path / "ranges")
+    write_partitioned_by(
+        df, ["bucket"], more_file_columns=["id"], partitions=4
+    ).parquet(path)
+    split_dirs = 0
+    for d in glob.glob(f"{path}/bucket=*"):
+        ranges = sorted(
+            spark.read.parquet(f).agg(F.min("id"), F.max("id")).first()
+            for f in glob.glob(f"{d}/*.parquet")
+        )
+        split_dirs += len(ranges) > 1
+        for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
+            assert hi < lo
+    assert split_dirs >= 1

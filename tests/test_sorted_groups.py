@@ -85,6 +85,19 @@ def test_partitions_argument(df):
     assert grouped.sorted_df.rdd.getNumPartitions() == 2
 
 
+def test_apply_in_pandas_partitions_argument(df):
+    # the Arrow path groups over the same n-way hash layout as the lazy
+    # path, and the grouping reuses it without a second exchange
+    grouped = group_by_sorted(df, "k", "o", partitions=3)
+    result = grouped.apply_in_pandas(
+        lambda key, pdf: pdf[["k", "o"]], "k long, o long"
+    )
+    assert result.rdd.getNumPartitions() == 3
+    assert sorted(tuple(r) for r in result.collect()) == [
+        (k, o) for k in (1, 2, 3) for o in (1, 2, 3)
+    ]
+
+
 def test_missing_key_column(df):
     with pytest.raises(ValueError, match="key columns do not exist"):
         group_by_sorted(df, "nope", "o")
