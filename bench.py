@@ -62,8 +62,8 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # explodes, map-side partial aggregates, Arrow kernels) runs on a single
 # core no matter how many are available.  Two remedies were measured at
 # sf0.1/local[32]:
-#   - per-query repartition after read (registry._fanout, the
-#     SPARK_GRAFT_SCAN_FANOUT knob): fixes the scan-bound queries
+#   - per-query repartition after read (an opt-in fan-out in
+#     registry.load, since deleted): fixes the scan-bound queries
 #     (corr_matrix 5.9->1.3 s) but taxes every scan-light query with a
 #     full-table shuffle (ticks_events 0.4->4.3 s) — net LOSS over the
 #     149-query surface (200->218 s);
@@ -417,16 +417,20 @@ if _stale:
 HEADLINE += [q for q in QUERIES if q not in HEADLINE]
 
 
-def main() -> None:
+def session(cpus, app: str, memory: str = "90g", **conf) -> SparkSession:
+    """The bench's local session, log level ERROR.  The test suite and
+    the scripts under scripts/ start their session here, so they plan
+    and run the same way the bench does.  ``conf`` adds or overrides
+    Spark settings; pass dotted keys as ``**{"spark.x.y": v}``."""
     spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("spark_extension_spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app)
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "90g")
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         # pair of the repack: default openCost (4 MB) would bin-pack the
         # whole ~MB-scale repacked files into 1-3 splits; 64 KB lets
@@ -441,9 +445,15 @@ def main() -> None:
         # 0.45 s -> 0.25 s with it off).  Purely a debugging aid; errors
         # still raise, just without the per-call origin annotation.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config(map=conf)
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def main() -> None:
+    spark = session(CPUS, "spark_extension_spark-bench")
 
     try:
         sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", ""))

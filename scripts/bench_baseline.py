@@ -27,32 +27,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bench import _repack
-from spark_extension_spark.registry import QUERIES, load
+from bench import CPUS, SF_DIR, _repack, session
+from spark_extension_spark.registry import QUERIES, _LINEITEM_VALUE_COLUMNS, _diff_inputs, load
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WARM_DIR = "/root/testdata/sf0.001" if os.path.isdir("/root/testdata/sf0.001") else SF_DIR
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-_LINEITEM_VALUE_COLUMNS = [
-    "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice",
-    "l_discount", "l_tax", "l_returnflag", "l_linestatus", "l_shipdate",
-]
-
 
 # --- baseline formulations (BASELINE.md "Operational baseline protocol") ---
-
-
-def _diff_inputs(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    left = li.where(F.col("l_orderkey") % 10 != 7)
-    right = li.where(F.col("l_orderkey") % 10 != 3).withColumn(
-        "l_quantity",
-        F.when(F.col("l_orderkey") % 7 == 0, F.col("l_quantity") + 1).otherwise(
-            F.col("l_quantity")
-        ),
-    )
-    return left, right
 
 
 def base_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -260,23 +240,7 @@ def _time(spark, fn, sf_dir, warm_dir):
 
 
 def main() -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("spark_extension_spark-baseline")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "90g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.openCostInBytes", str(64 * 1024))
-        # same production knob as bench.py: per-call call-site capture
-        # off, so BOTH sides pay identical plan-construction costs
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(CPUS, "spark_extension_spark-baseline")
 
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     repacked = os.path.join(here, ".bench_cache", os.path.basename(SF_DIR.rstrip("/")))

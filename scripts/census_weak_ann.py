@@ -45,28 +45,15 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import session
 
 SRC = os.environ.get("SRC", "/root/repo/.bench_cache/sf0.1/embeddings.parquet")
 BASE = os.environ.get("BASE", "/tmp/weakscale_emb")
 K = int(sys.argv[1])
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName(f"census-weak-ann-x{K}")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.driver.memory", "90g")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.files.openCostInBytes", str(64 * 1024))
-    .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+spark = session(32, f"census-weak-ann-x{K}")
 
 shard_dir = os.path.join(BASE, f"x{K}")
 path = os.path.join(shard_dir, "embeddings.parquet")

@@ -26,8 +26,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+from pyspark.sql import Window
 from pyspark.sql import functions as F
-from pyspark.sql import SparkSession, Window
+
+from bench import session
 
 SRC = os.environ.get("SRC", "/root/repo/.bench_cache/sf0.1/documents.parquet")
 BASE = os.environ.get("BASE", "/tmp/weakscale_docs")
@@ -50,21 +52,7 @@ if not os.path.exists(path):
         """
     )
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName(f"census-weak-dedup-x{K}")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.driver.memory", "90g")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.files.openCostInBytes", str(64 * 1024))
-    .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+spark = session(32, f"census-weak-dedup-x{K}")
 
 from spark_extension_spark.operators.dedup import (
     minhash_lsh_pairs,

@@ -29,8 +29,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from bench import session
 
 DOC_SRC = os.environ.get("DOC_SRC", "/root/repo/.bench_cache/sf0.1/documents.parquet")
 ORD_SRC = os.environ.get("ORD_SRC", "/root/repo/.bench_cache/sf0.1/orders.parquet")
@@ -63,21 +64,7 @@ if not os.path.exists(ord_path):
         """
     )
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .appName(f"census-weak-iter-x{K}")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.driver.memory", "90g")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.files.openCostInBytes", str(64 * 1024))
-    .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+spark = session(32, f"census-weak-iter-x{K}")
 
 from spark_extension_spark.operators import dedup as D  # noqa: E402
 from spark_extension_spark.operators.graph import pagerank  # noqa: E402

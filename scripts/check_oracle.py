@@ -3,6 +3,8 @@
 sf0.01, compare row count, column names, and order-insensitive values.
 
 Usage: python scripts/check_oracle.py [--strict] [query ...]
+       (no query = every query; with ``--strict``, the first 50 of
+       ``__spark_entry__.queries()``, i.e. the rotated driver window)
 
 ``--strict`` compares floats bit-exactly (``repr``) instead of the
 default 12-significant-figure normalization.  Calibration (round 5,
@@ -13,6 +15,15 @@ sig figs while still catching real drift (the pre-fix group_ols oracle
 was 7e-10 off — invisible at the old 6-sig-fig default).  Run the
 driver-window prefix under ``--strict`` before each round; everything
 fixable to bit-exact should be (decimal sums + via-VARCHAR casts).
+
+Reading a strict mismatch (round 5): one confined to the LAST 1-2
+significant digits of a double is an engine transcendental delta (JVM
+``Math.pow``/``log`` vs DuckDB's libm differ by <=1 ulp on some
+inputs), not a formulation bug, and the driver's hash tolerates it —
+``tfidf_documents``, ``bm25_documents``, ``time_bucket_rollup_events``
+and the three ``similarity_*_topk`` queries all showed exactly such
+ulp-level strict mismatches yet were driver-hash-GREEN in rounds 2-4.
+Treat anything bigger than the final two digits as a real bug.
 """
 
 from __future__ import annotations
@@ -24,9 +35,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
-from pyspark.sql import SparkSession
 
 import __spark_entry__ as entry
+from bench import session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 # Cross-layout certification: point DuckDB's views at a DIFFERENT copy
@@ -97,7 +108,7 @@ def main() -> int:
         # subprocesses so each JVM stays well under the limit.
         import subprocess
 
-        names = list(entry.queries())
+        names = list(entry.queries())[: 50 if STRICT else None]
         rc = 0
         flag = ["--strict"] if STRICT else []
         for i in range(0, len(names), CHUNK):
@@ -114,16 +125,8 @@ def main() -> int:
     # this mirror, so layout-sensitivity IS a gate bug.
     cpus = os.environ.get("SPARK_GRAFT_CHECK_CPUS", "8")
     parts = os.environ.get("SPARK_GRAFT_CHECK_PARTITIONS", "8")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("check_oracle")
-        .config("spark.sql.shuffle.partitions", parts)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(cpus, "check_oracle", memory="8g",
+                    **{"spark.sql.shuffle.partitions": parts})
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

@@ -16,7 +16,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from bench import CPUS, SF_DIR, session
 
 
 def main() -> int:
@@ -28,30 +28,14 @@ def main() -> int:
         return 2
     outdir, suffix, *names = sys.argv[1:]
     os.makedirs(outdir, exist_ok=True)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("dump_plans")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.files.openCostInBytes", str(64 * 1024))
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(CPUS, "dump_plans", memory="16g")
     from spark_extension_spark.registry import QUERIES
 
     import contextlib
     import io
 
     for name in names:
-        df = QUERIES[name](spark, sf_dir)
+        df = QUERIES[name](spark, SF_DIR)
         # public API: explain(mode=...) prints; capture its stdout
         # (the former PythonSQLUtils/_jdf route relied on PySpark
         # internals that can move across versions)

@@ -7,7 +7,6 @@ names.  This feeds ``__spark_entry__.py`` (driver correctness gate) and
 
 from __future__ import annotations
 
-import os
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,34 +39,6 @@ def register(name: str, oracle: str = None):
     return wrap
 
 
-# Opt-in ingest fan-out (SPARK_GRAFT_SCAN_FANOUT=1): for inputs whose
-# layout cannot be split (the driver testdata ships ONE parquet row
-# group per table) AND cannot be rewritten, scatter tables above the
-# size threshold to the default parallelism right after the read — one
-# ~MB-scale shuffle buys N-core scan-stage parallelism (measured at
-# sf0.1/local[32]: corr_matrix 5.7→1.2 s, profile 3.7→1.3 s, simhash
-# 2×).  OFF by default, and bench.py does NOT set it: the shuffle
-# taxes every scan-light query (ticks_events 0.4→4.3 s — a measured
-# net loss over the full surface), so when the input CAN be rewritten,
-# repack it once instead (bench.py's ingest repack; PLANS.md
-# "Scan-splittability").  Gate values are partitioning-independent by
-# the EXACTNESS discipline (certified by the oracle sweep under both
-# fan-out and the repacked layout).
-_FANOUT_MIN_BYTES = 1_000_000
-
-
-def _fanout(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "") != "1":
-        return df
-    try:
-        size = os.path.getsize(path)
-    except OSError:
-        return df
-    if size < _FANOUT_MIN_BYTES:
-        return df
-    return df.repartition(spark.sparkContext.defaultParallelism)
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     if table == "events":
         # events.ts has shipped as INT64 TIMESTAMP(NANOS) in some testdata
@@ -76,11 +47,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         # reads as TIMESTAMP/TIMESTAMP_NTZ).  Normalize every variant to
         # the library contract: ts = nanoseconds since the epoch, as LONG.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _fanout(
-        spark.read.parquet(f"{sf_dir}/{table}.parquet"),
-        spark,
-        f"{sf_dir}/{table}.parquet",
-    )
+    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
     if table == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "timestamp_ntz":

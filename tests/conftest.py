@@ -1,30 +1,20 @@
+import base64
 import os
 import sys
+from types import SimpleNamespace
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession
+from bench import session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    session = (
-        SparkSession.builder.master("local[4]")
-        .appName("spark_extension_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "4g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    session.sparkContext.setLogLevel("ERROR")
-    yield session
+    yield session(4, "spark_extension_spark-tests", memory="4g")
 
 
 @pytest.fixture(scope="session")
@@ -34,3 +24,48 @@ def sf_dir():
 
 def load(spark, sf_dir, table):
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+
+
+@pytest.fixture(scope="session")
+def parquet_files(tmp_path_factory):
+    """The parquet metadata fixtures (FIXTURES.md §9), written with pyarrow.
+
+    ``test``: directory of two files, ``id BIGINT NOT NULL`` and
+    ``val DOUBLE NOT NULL``, 100 rows in 1 row group and 200 rows in 2.
+    ``encrypted_footer``: one file whose footer is encrypted (``PARE``
+    magic), unreadable without its keys.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyarrow.parquet.encryption as pe
+
+    class Kms(pe.KmsClient):
+        """In-process KMS: a wrapped key is the key itself, base64."""
+
+        def wrap_key(self, key_bytes, master_key_identifier):
+            return base64.b64encode(key_bytes)
+
+        def unwrap_key(self, wrapped_key, master_key_identifier):
+            return base64.b64decode(wrapped_key)
+
+    root = tmp_path_factory.mktemp("parquet")
+    schema = pa.schema([pa.field("id", pa.int64(), nullable=False),
+                        pa.field("val", pa.float64(), nullable=False)])
+
+    def table(lo, hi):
+        return pa.table({"id": range(lo, hi), "val": [i / 10 for i in range(lo, hi)]},
+                        schema=schema)
+
+    test = root / "test.parquet"
+    test.mkdir()
+    pq.write_table(table(0, 100), test / "file1.parquet", row_group_size=100)
+    pq.write_table(table(100, 300), test / "file2.parquet", row_group_size=100)
+
+    encrypted_footer = root / "encrypted2.parquet"
+    props = pe.CryptoFactory(lambda config: Kms()).file_encryption_properties(
+        pe.KmsConnectionConfig(),
+        pe.EncryptionConfiguration(footer_key="footer", column_keys={"column": ["val"]},
+                                   double_wrapping=False),
+    )
+    pq.write_table(table(0, 100), encrypted_footer, encryption_properties=props)
+    return SimpleNamespace(test=str(test), encrypted_footer=str(encrypted_footer))

@@ -94,26 +94,3 @@ def test_gate_outputs_are_scalar_typed(spark):
             if t.startswith(("array", "map", "struct")):
                 offenders.append((name, f.name, t))
     assert not offenders, f"non-scalar gate outputs: {offenders}"
-
-
-def test_scan_fanout_policy(spark, monkeypatch):
-    # opt-in only: without the env var, load() adds no repartition (the
-    # plan-shape pins depend on this); with it, tables above the size
-    # threshold scatter to the default parallelism and values are
-    # unchanged (partitioning-independence is the EXACTNESS contract)
-    from spark_extension_spark.registry import load
-
-    sf = "/root/testdata/sf0.01"
-    monkeypatch.delenv("SPARK_GRAFT_SCAN_FANOUT", raising=False)
-    base = load(spark, sf, "lineitem")
-    base_parts = base.rdd.getNumPartitions()
-
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "1")
-    fan = load(spark, sf, "lineitem")  # 1.0 MB: above threshold
-    assert fan.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    tiny = load(spark, sf, "region")   # 2 KB: below threshold, untouched
-    assert tiny.rdd.getNumPartitions() <= base_parts + 1
-
-    a = sorted(map(tuple, base.groupBy("l_returnflag").count().collect()))
-    b = sorted(map(tuple, fan.groupBy("l_returnflag").count().collect()))
-    assert a == b

@@ -6,9 +6,11 @@ Parity: reference ParquetSuite.scala:353-417 ("read encrypted parquets"):
   the per-chunk `encrypted` flag set; partitions throws.
 - encrypted2.parquet (encrypted footer): all five sources throw.
 
-The fixtures are read-only reference files; no keys are configured, so the
-"with decryption keys" half of the reference test is out of scope (pyarrow
-KMS wiring is not available in this environment).
+encrypted1.parquet is the reference's Spark-written file (its goldens, 1358
+bytes and `org.apache.spark.version`, belong to it).  The encrypted-footer
+file is written by the ``parquet_files`` fixture (conftest) with pyarrow's
+encryption API and an in-process KMS.  The sources get no keys, so the
+"with decryption keys" half of the reference test is out of scope.
 """
 
 import pytest
@@ -23,18 +25,17 @@ from spark_extension_spark.sources.parquet_metadata import (
 )
 
 PLAINTEXT_FOOTER_FILE = "/root/reference/src/test/files/encrypted1.parquet"
-ENCRYPTED_FOOTER_FILE = "/root/reference/src/test/files/encrypted2.parquet"
 PLAIN_FILE = "/root/testdata/sf0.001/nation.parquet"
 
 
-def test_footer_scan_classification():
+def test_footer_scan_classification(parquet_files):
     c1 = scan_footer_crypto(PLAINTEXT_FOOTER_FILE)
     assert c1.encryption == "PLAINTEXT_FOOTER"
     # column 1 (`val`) of row group 0 is encrypted with a column key
     assert c1.encrypted_chunks == {(0, 1): ["val"]}
     assert c1.row_group_offsets == [4]
 
-    c2 = scan_footer_crypto(ENCRYPTED_FOOTER_FILE)
+    c2 = scan_footer_crypto(parquet_files.encrypted_footer)
     assert c2.encryption == "ENCRYPTED_FOOTER"
 
     c0 = scan_footer_crypto(PLAIN_FILE)
@@ -110,10 +111,10 @@ def test_partitions_plaintext_footer_raises(spark):
      parquet_partitions],
     ids=["metadata", "schema", "blocks", "block_columns", "partitions"],
 )
-def test_encrypted_footer_raises(spark, source):
+def test_encrypted_footer_raises(spark, parquet_files, source):
     # reference ParquetSuite.scala:402-417: every source throws without keys
-    with pytest.raises(Exception, match="(?i)encrypted"):
-        source(spark, ENCRYPTED_FOOTER_FILE).collect()
+    with pytest.raises(Exception, match="footer is encrypted"):
+        source(spark, parquet_files.encrypted_footer).collect()
 
 
 def test_unencrypted_files_unaffected(spark):

@@ -13,14 +13,14 @@ from spark_extension_spark.sources.parquet_metadata import (
     parquet_schema,
 )
 
-# reference fixture: 2 files, schema id:int64 + val:double, 100+200 rows,
-# 1+2 row groups (reference ParquetSuite.scala:84-117)
-FIXTURE = "/root/reference/src/test/files/test.parquet"
+# ``parquet_files.test`` (conftest): the reference fixture rewritten with
+# pyarrow — 2 files, schema id:int64 + val:double, 100+200 rows, 1+2 row
+# groups (reference ParquetSuite.scala:84-117)
 SF_LINEITEM = "/root/testdata/sf0.001/lineitem.parquet"
 
 
-def test_metadata_fixture(spark):
-    df = parquet_metadata(spark, FIXTURE)
+def test_metadata_fixture(spark, parquet_files):
+    df = parquet_metadata(spark, parquet_files.test)
     rows = df.collect()
     assert len(rows) == 2
     by_rows = {r["rows"]: r for r in rows}
@@ -31,8 +31,8 @@ def test_metadata_fixture(spark):
     assert all(r["encryption"] == "UNENCRYPTED" for r in rows)
 
 
-def test_schema_fixture(spark):
-    df = parquet_schema(spark, FIXTURE)
+def test_schema_fixture(spark, parquet_files):
+    df = parquet_schema(spark, parquet_files.test)
     rows = df.collect()
     assert len(rows) == 4  # 2 files x 2 columns
     cols = {(r["columnName"], r["type"]) for r in rows}
@@ -40,23 +40,23 @@ def test_schema_fixture(spark):
     assert all(r["isPrimitive"] for r in rows)
 
 
-def test_blocks_fixture(spark):
-    df = parquet_blocks(spark, FIXTURE)
+def test_blocks_fixture(spark, parquet_files):
+    df = parquet_blocks(spark, parquet_files.test)
     rows = df.collect()
     assert len(rows) == 3  # 1 + 2 row groups
     assert sorted(r["block"] for r in rows) == [1, 1, 2]
     assert sum(r["rows"] for r in rows) == 300
 
 
-def test_block_columns_fixture(spark):
-    df = parquet_block_columns(spark, FIXTURE)
+def test_block_columns_fixture(spark, parquet_files):
+    df = parquet_block_columns(spark, parquet_files.test)
     rows = df.collect()
     assert len(rows) == 6  # 3 blocks x 2 columns
     assert {tuple(r["column"]) for r in rows} == {("id",), ("val",)}
 
 
-def test_partitions_fixture(spark):
-    df = parquet_partitions(spark, FIXTURE)
+def test_partitions_fixture(spark, parquet_files):
+    df = parquet_partitions(spark, parquet_files.test)
     rows = df.collect()
     # all row groups assigned exactly once across splits
     assert sum(r["blocks"] for r in rows) == 3
@@ -91,8 +91,8 @@ def test_metadata_directory_input(spark, sf_dir):
     assert df.count() == n_files
 
 
-def test_parallelism_knob(spark):
-    df = parquet_metadata(spark, FIXTURE, parallelism=3)
+def test_parallelism_knob(spark, parquet_files):
+    df = parquet_metadata(spark, parquet_files.test, parallelism=3)
     assert df.rdd.getNumPartitions() == 3
 
 
