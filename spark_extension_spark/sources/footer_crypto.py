@@ -1,8 +1,9 @@
 """Parquet modular-encryption detection from raw footer bytes.
 
-pyarrow (21.x) aborts the whole process — C++ ``std::terminate``, not a
-catchable Python exception — the moment ``md.row_group(g).column(c)`` is
-constructed for an *encrypted column chunk* of a plaintext-footer file
+pyarrow (observed with 16.1 and 21.x) aborts the whole process — C++
+``std::terminate`` on "Cannot decrypt ColumnMetadata", exit status 134,
+not a catchable Python exception — the moment ``md.row_group(g).column(c)``
+is constructed for an *encrypted column chunk* of a plaintext-footer file
 without decryption properties.  Inside ``mapInPandas`` that kills the
 executor worker, so a try/except guard is useless: the five metadata
 sources must know which chunks are encrypted BEFORE touching them.

@@ -32,8 +32,15 @@ def parquet_files(tmp_path_factory):
 
     ``test``: directory of two files, ``id BIGINT NOT NULL`` and
     ``val DOUBLE NOT NULL``, 100 rows in 1 row group and 200 rows in 2.
-    ``encrypted_footer``: one file whose footer is encrypted (``PARE``
-    magic), unreadable without its keys.
+    ``plaintext_footer`` (``encrypted1.parquet``): ``id INT64 NOT NULL``
+    and ``val FLOAT32 NOT NULL``, 100 rows in 1 row group, footer in
+    plaintext (``PAR1`` magic) and ``val`` encrypted under a column key.
+    ``encrypted_footer`` (``encrypted2.parquet``): one file whose footer is
+    encrypted (``PARE`` magic), unreadable without its keys.
+    ``decryption``: pyarrow decryption properties that hold both files'
+    keys, for reading them independently of the keyless sources.
+
+    Both encrypted files wrap their data keys with the same in-process KMS.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -61,11 +68,25 @@ def parquet_files(tmp_path_factory):
     pq.write_table(table(0, 100), test / "file1.parquet", row_group_size=100)
     pq.write_table(table(100, 300), test / "file2.parquet", row_group_size=100)
 
+    factory = pe.CryptoFactory(lambda config: Kms())
+    kms = pe.KmsConnectionConfig()
+
+    def encryption(plaintext_footer):
+        return factory.file_encryption_properties(
+            kms,
+            pe.EncryptionConfiguration(footer_key="footer", column_keys={"column": ["val"]},
+                                       plaintext_footer=plaintext_footer,
+                                       double_wrapping=False),
+        )
+
+    plaintext_footer = root / "encrypted1.parquet"
+    float_schema = pa.schema([pa.field("id", pa.int64(), nullable=False),
+                              pa.field("val", pa.float32(), nullable=False)])
+    pq.write_table(table(0, 100).cast(float_schema), plaintext_footer,
+                   encryption_properties=encryption(True))
+
     encrypted_footer = root / "encrypted2.parquet"
-    props = pe.CryptoFactory(lambda config: Kms()).file_encryption_properties(
-        pe.KmsConnectionConfig(),
-        pe.EncryptionConfiguration(footer_key="footer", column_keys={"column": ["val"]},
-                                   double_wrapping=False),
-    )
-    pq.write_table(table(0, 100), encrypted_footer, encryption_properties=props)
-    return SimpleNamespace(test=str(test), encrypted_footer=str(encrypted_footer))
+    pq.write_table(table(0, 100), encrypted_footer, encryption_properties=encryption(False))
+    return SimpleNamespace(test=str(test), plaintext_footer=str(plaintext_footer),
+                           encrypted_footer=str(encrypted_footer),
+                           decryption=factory.file_decryption_properties(kms))
