@@ -23,6 +23,13 @@ from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DateType,
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..session import append_job_description
 from ..utils import (
@@ -600,6 +607,105 @@ def _record_cc_stats(
             del _CC_STATS_LOG[: len(_CC_STATS_LOG) - _CC_STATS_MAX]
 
 
+# Symmetric edge sets (``sym`` rows: both directions plus one self-loop
+# per node) of at most this many rows are labelled on the driver by
+# _cc_local; larger ones run the distributed loop.  Measured on piles
+# of 5-cliques (diameter 1: the loop's best case, one batch), a whole
+# connected_components call over a cached edge list, median of 3,
+# local[4] on 4 vCPUs, 4 GB driver heap (PLANS.md "Round-17"):
+#
+#   sym rows   loop s   local s   toArrow / union-find /   driver RSS MB,
+#                                 createDataFrame s        python / JVM
+#     10,000     1.56      0.91   0.10 / 0.00 / 0.02         +5 / 1028
+#    100,000     2.39      1.08   0.09 / 0.00 / 0.05        +14 / 1503
+#  1,000,000     3.93      2.70   0.22 / 0.03 / 0.14        +69 / 1404
+#  2,000,000     5.84      4.06   0.20 / 0.06 / 0.29       +136 / 2861
+#  4,000,000     9.58      8.98   0.38 / 0.24 / 0.67       +266 / 2952
+#
+# (loop JVM RSS: 1269, 1375, 1644, 1814, 2171 MB.)  At 4M rows the
+# local path no longer wins and the driver holds ~0.8 GB more; the
+# bound sits at 2M.  Both paths share the sym build and the result
+# count, which are most of the local path's time.
+_CC_LOCAL_MAX_EDGES = 2_000_000
+
+
+def _cc_local_admits(dtype) -> bool:
+    """Id types whose Arrow sort order is Spark's: integers compare by
+    value in both, UTF-8-binary strings by unsigned bytes in both, and
+    dates by their day number.  Floating-point ids (``-0.0``/``0.0``,
+    NaN), decimals, timestamps and collated strings stay on the loop."""
+    return isinstance(dtype, (IntegralType, DateType)) or (
+        type(dtype) is StringType and dtype.isUTF8BinaryCollation()
+    )
+
+
+def _min_label_ranks(n: int, a, b) -> Tuple["np.ndarray", int]:
+    """Smallest node rank of each component over ranks ``0..n-1`` and
+    rank edges ``a[i] — b[i]`` given in both directions; returns the
+    labels and the number of hook rounds.  A round hooks every root to
+    the smallest root among its neighbours (``np.minimum.at``), then
+    jumps pointers until every node points at its root.  Pointers only
+    decrease and stay inside the component, so a round that hooks
+    nothing proves the fixpoint: each root is then its component's
+    minimum."""
+    import numpy as np
+
+    parent = np.arange(n)
+    rounds = 0
+    while True:
+        rounds += 1
+        hooked = parent.copy()
+        np.minimum.at(hooked, parent[a], parent[b])
+        if np.array_equal(hooked, parent):
+            return parent, rounds
+        parent = hooked
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
+def _cc_local(sym: DataFrame, algorithm: str, max_iterations: int) -> DataFrame:
+    """Connected components of a small symmetric edge set ``sym``
+    (see :data:`_CC_LOCAL_MAX_EDGES`), computed on the driver: one
+    ``toArrow()`` job, a numpy union-find, and ``createDataFrame``.
+    Labels are bit-identical to the loops' (EXACTNESS.md): ids are
+    ranked in Arrow sort order, which :func:`_cc_local_admits` limits to
+    types Spark orders the same way, so the smallest rank is Spark's
+    smallest id.  A null id links nothing; under ``label`` its row takes
+    its non-null neighbours' smallest label (null when it has none), and
+    under ``star`` a null label, as each loop gives it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    with append_job_description("connected_components:local"):
+        table = sym.toArrow()
+    # every node has its self-loop, so src holds every id
+    ids = pc.unique(table["src"]).drop_null()
+    ids = ids.take(pc.sort_indices(ids))
+    a, b = (
+        pc.index_in(table[c], value_set=ids).fill_null(-1).to_numpy()
+        for c in ("src", "dst")
+    )
+    link = (a >= 0) & (b >= 0) & (a != b)
+    labels, rounds = _min_label_ranks(len(ids), a[link], b[link])
+    rank, out_ids = pa.array(labels), ids
+    if table["src"].null_count:
+        nbrs = labels[b[(a < 0) & (b >= 0)]]
+        null_rank = int(nbrs.min()) if nbrs.size and algorithm == "label" else None
+        rank = pa.concat_arrays([rank, pa.array([null_rank], pa.int64())])
+        out_ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
+    dtype = sym.schema["src"].dataType
+    out = sym.sparkSession.createDataFrame(
+        pa.table({"id": out_ids, "cluster_id": ids.take(rank)}),
+        StructType([StructField("id", dtype), StructField("cluster_id", dtype)]),
+    )
+    _record_cc_stats("local", rounds, max_iterations)
+    return out
+
+
 def _cc_label_propagation(
     sym: DataFrame, max_iterations: int, check_every: int,
     cycler: Optional[LocalCheckpointCycler] = None,
@@ -787,6 +893,16 @@ def connected_components(
     The step that turns near-duplicate *pairs* (LSH / n-gram Jaccard
     output) into dedup *decisions* (keep one doc per cluster).
 
+    Small edge sets finish on the driver: when the symmetric edge set
+    (both directions plus one self-loop per node) has at most
+    ``_CC_LOCAL_MAX_EDGES`` rows and the ids are integers, UTF-8-binary
+    strings or dates, it is collected with ``toArrow()`` and labelled by
+    a numpy union-find, with the same labels either algorithm gives
+    (jobs ``:edges``, ``:local``, ``:result``).  Everything below about
+    batches, checkpoints and ``max_iterations``/``check_every`` applies
+    to the distributed loop that larger edge sets and other id types
+    run; the driver-side path always converges.
+
     ``algorithm='label'`` (default): min-label propagation — each step
     is one equi-join + one min-aggregate keyed by node id; steps needed
     = graph diameter (near-dup graphs are piles of small cliques —
@@ -820,8 +936,8 @@ def connected_components(
     The returned labels are persisted (already materialized — reading
     them costs nothing); pass an ``unpersist_handle`` to release that
     cache when done, as with the other persisting dedup operators.
-    Per-round ``localCheckpoint`` generations are freed as they are
-    superseded (:class:`~spark_extension_spark.utils.
+    On the loop, per-round ``localCheckpoint`` generations are freed as
+    they are superseded (:class:`~spark_extension_spark.utils.
     LocalCheckpointCycler`).  The FINAL generation backs the returned
     labels' lineage, and its lifetime follows the handle: with an
     ``unpersist_handle`` it stays live until the handle fires (the
@@ -834,13 +950,25 @@ def connected_components(
     with a missing-checkpoint-block error: treat the no-handle result
     as single-use-per-materialization, or pass a handle.  On a mid-loop
     failure every generation is freed before the exception propagates.
+    The driver-side path checkpoints nothing: its result is recomputable
+    with or without a handle, and it gives no warning.
 
-    ``warn_single_use=False`` suppresses the no-handle runtime warning
-    — for callers that consume the labels immediately (one action, then
-    done) and accept the single-use contract knowingly.
+    ``warn_single_use=False`` suppresses the loop's no-handle runtime
+    warning — for callers that consume the labels immediately (one
+    action, then done) and accept the single-use contract knowingly.
     ``_warn_stacklevel`` lets the composed operators that wrap this one
     point the warning at *their* caller instead of library internals.
     """
+    # checked before any Spark work: a bad argument must not first run
+    # the upstream pair pipeline
+    if algorithm not in ("label", "star"):
+        raise ValueError(
+            f"unknown algorithm {algorithm!r}: expected 'label' or 'star'"
+        )
+    if check_every < 1:
+        raise ValueError(f"check_every must be >= 1, got {check_every}")
+    if max_iterations < 1:
+        raise ValueError(f"max_iterations must be >= 1, got {max_iterations}")
     # Symmetrize in ONE pass over the (possibly expensive) upstream
     # pair pipeline: explode each edge into both directions instead of
     # a union of two scans.  The union form needed a separate
@@ -877,21 +1005,20 @@ def connected_components(
         .persist()
     )
     with append_job_description("connected_components:edges"):
-        sym.count()  # force once: later consumers read the warm cache
+        n = sym.count()  # force once: later consumers read the warm cache
     spark = edges.sparkSession
     cycler = None
     ok = False
     try:
-        if algorithm == "star":
+        id_type = sym.schema["src"].dataType
+        if n <= _CC_LOCAL_MAX_EDGES and _cc_local_admits(id_type):
+            out = _cc_local(sym, algorithm, max_iterations)
+        elif algorithm == "star":
             cycler = LocalCheckpointCycler(spark, lag=3)
             out = _cc_star(sym, max_iterations, cycler)
-        elif algorithm == "label":
+        else:
             cycler = LocalCheckpointCycler(spark, lag=1)
             out = _cc_label_propagation(sym, max_iterations, check_every, cycler)
-        else:
-            raise ValueError(
-                f"unknown algorithm {algorithm!r}: expected 'label' or 'star'"
-            )
         # force the result before releasing the inputs below — otherwise
         # the caller's first action would recompute the whole upstream
         # edge pipeline with every cache already dropped
@@ -956,9 +1083,10 @@ def near_dup_clusters(
     smallest doc id in the component, so "keep the representative" is
     ``WHERE doc_id = cluster_id`` and "drop the rest" is the negation.
 
-    No-handle results inherit :func:`connected_components`' single-use
-    contract (and its runtime warning; ``warn_single_use=False``
-    accepts the contract silently)."""
+    No-handle results of the distributed loop inherit
+    :func:`connected_components`' single-use contract (and its runtime
+    warning; ``warn_single_use=False`` accepts the contract silently);
+    a pair list small enough for the driver-side path has neither."""
     return connected_components(
         pairs,
         src=id_a,

@@ -930,17 +930,21 @@ def semantic_dedup(
     the one representative per cluster.
 
     Pipeline: coarse cells → in-cell exact cosine pairs (Arrow/numpy
-    kernel) → connected components (min-label propagation) → left join
-    back so unique vectors keep themselves.  Every stage is an
-    equi-join or aggregate keyed by cell / id — nothing quadratic in
-    the corpus, nothing driver-side beyond the ``n_cells`` seed rows.
+    kernel) → connected components (a driver-side union-find for a
+    small pair set, min-label propagation otherwise) → left join back
+    so unique vectors keep themselves.  Every stage is an equi-join or
+    aggregate keyed by cell / id — nothing quadratic in the corpus,
+    nothing driver-side beyond the ``n_cells`` seed rows and a pair set
+    within connected components' driver-side bound.
     Cell sizing / cap accounting as in :func:`semantic_near_dup_pairs`.
 
     The cluster labels persist internally; pass an
     :class:`~spark_extension_spark.utils.UnpersistHandle` to release
-    that cache (and keep the result recomputable) — without one the
-    output inherits :func:`~.dedup.connected_components`' single-use
-    contract and its runtime warning."""
+    that cache (and keep the result recomputable) — without one, when
+    the pairs run the distributed loop, the output inherits
+    :func:`~.dedup.connected_components`' single-use contract and its
+    runtime warning (a pair set small enough for the driver-side path
+    has neither)."""
     from .dedup import connected_components
 
     pairs = semantic_near_dup_pairs(

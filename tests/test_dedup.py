@@ -99,6 +99,30 @@ def test_simhash(docs, spark):
 # -- connected components ---------------------------------------------------
 
 
+@pytest.fixture
+def cc_loop(monkeypatch):
+    """Send every non-empty edge set to the distributed loop.  Small
+    edge sets otherwise finish in one driver-side union-find
+    (``_CC_LOCAL_MAX_EDGES``), and the tests that pin the loop's batch,
+    job, checkpoint and warning behaviour need the loop itself."""
+    from spark_extension_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
+
+
+def _job_descriptions(spark):
+    """{job id: description} of every job the status store holds."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    out = {}
+    for i in range(jobs.size()):
+        job = jobs.apply(i)
+        d = job.description()
+        out[job.jobId()] = d.get() if d.isDefined() else None
+    return out
+
+
 def test_connected_components_two_clusters(spark):
     from spark_extension_spark import connected_components
 
@@ -167,7 +191,7 @@ def test_connected_components_check_every_batching(spark):
     assert set(got.values()) == {1}
 
 
-def test_connected_components_last_step_detection(spark):
+def test_connected_components_last_step_detection(spark, cc_loop):
     # round-13: convergence is judged on the batch's LAST step alone,
     # so the batch that reaches the fixpoint also proves it — a
     # diameter-2 graph at check_every=3 must exit after ONE batch
@@ -192,7 +216,7 @@ def test_connected_components_last_step_detection(spark):
     assert entry["iterations"] == 3 and entry["converged"]  # one batch
 
 
-def test_connected_components_stats_log(spark):
+def test_connected_components_stats_log(spark, cc_loop):
     from spark_extension_spark import connected_components
     from spark_extension_spark.operators.dedup import cc_stats_log
 
@@ -298,52 +322,156 @@ def _random_multigraph(seed):
     return edges
 
 
-def test_connected_components_match_union_find(spark):
+def test_connected_components_match_union_find(spark, monkeypatch):
     # seeded random multigraphs (repeated and reversed edges, input
     # self-loops, a node that only loops to itself, chains longer than
-    # a batch): labels equal a union-find reference at every batch size,
-    # equal the star algorithm, and the label loop stops at the first
-    # batch whose last step is a no-op
+    # a batch): labels equal a union-find reference on the driver-side
+    # path and on the loop at every batch size, equal the star
+    # algorithm, and the label loop stops at the first batch whose last
+    # step is a no-op
     from spark_extension_spark import connected_components
+    from spark_extension_spark.operators import dedup
     from spark_extension_spark.operators.dedup import cc_stats_log
 
-    def run(edges, schema, **kw):
+    bound = dedup._CC_LOCAL_MAX_EDGES
+
+    def run(edges, schema, local, **kw):
+        monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", bound if local else 0)
+        cc_stats_log(clear=True)
         df = spark.createDataFrame(edges, schema)
         out = connected_components(df, warn_single_use=False, **kw)
-        return {r["id"]: r["cluster_id"] for r in out.collect()}
+        got = {r["id"]: r["cluster_id"] for r in out.collect()}
+        (entry,) = cc_stats_log(clear=True)
+        assert (entry["algorithm"] == "local") == local
+        return got, entry
 
     for seed in range(6):
         edges = _random_multigraph(seed)
         want = _union_find_labels(edges)
         steps = _label_steps(edges, want)
         for check_every in (1, 2, 3):
-            cc_stats_log(clear=True)
-            assert run(edges, "id_a long, id_b long", check_every=check_every) == want
-            (entry,) = cc_stats_log(clear=True)
+            got, entry = run(edges, "id_a long, id_b long", False, check_every=check_every)
+            assert got == want
             batches = -(-(steps + 1) // check_every)
             assert entry["iterations"] == batches * check_every, (seed, check_every)
-        star = run(edges, "id_a long, id_b long", algorithm="star")
+        for algorithm in ("label", "star"):
+            got, entry = run(edges, "id_a long, id_b long", True, algorithm=algorithm)
+            assert got == want, (seed, algorithm)
+            assert entry["converged"] and entry["iterations"] >= 1
+        star, _ = run(edges, "id_a long, id_b long", False, algorithm="star")
         assert star == want, seed
 
-    # string ids: the same loop, ordered as strings
-    words = [("m", "k"), ("k", "c"), ("c", "c"), ("x", "q"), ("q", "x"), ("z", "z")]
+    # string ids: ordered as strings, by UTF-8 bytes ("z" < "é", "Z" < "ä")
+    words = [("m", "k"), ("k", "c"), ("c", "c"), ("x", "q"), ("q", "x"), ("z", "z"),
+             ("é", "z"), ("ä", "Z")]
     for check_every in (1, 2, 3):
-        got = run(words, "id_a string, id_b string", check_every=check_every)
+        got, _ = run(words, "id_a string, id_b string", False, check_every=check_every)
         assert got == _union_find_labels(words)
+    assert run(words, "id_a string, id_b string", True)[0] == _union_find_labels(words)
     # a null id links nothing and takes its neighbours' smallest label
-    # (the star algorithm gives it a null label instead, so it is not
-    # compared here)
+    # (the star algorithm gives it a null label instead, on either path)
     nulls = [(5, 4), (4, 3), (None, 5), (9, None), (9, 8), (None, None), (7, 7)]
+    want = {3: 3, 4: 3, 5: 3, 7: 7, 8: 8, 9: 8, None: 3}
     for check_every in (1, 2, 3):
-        got = run(nulls, "id_a long, id_b long", check_every=check_every)
-        assert got == _union_find_labels(nulls) == {
-            3: 3, 4: 3, 5: 3, 7: 7, 8: 8, 9: 8, None: 3
-        }
-    assert run([(None, None)], "id_a long, id_b long") == {None: None}
+        got, _ = run(nulls, "id_a long, id_b long", False, check_every=check_every)
+        assert got == _union_find_labels(nulls) == want
+    assert run(nulls, "id_a long, id_b long", True)[0] == want
+    for local in (True, False):
+        star, _ = run(nulls, "id_a long, id_b long", local, algorithm="star")
+        assert star == {**want, None: None}
+        assert run([(None, None)], "id_a long, id_b long", local)[0] == {None: None}
+
+
+def test_connected_components_local_path(spark, monkeypatch):
+    # a small edge set of an admitted id type finishes in one
+    # driver-side union-find: three labelled jobs, one stats record,
+    # no checkpoint and so no single-use warning, a recomputable result
+    import warnings as _warnings
+
+    from spark_extension_spark import connected_components
+    from spark_extension_spark.operators import dedup
+    from spark_extension_spark.operators.dedup import cc_stats_log
+    from spark_extension_spark.session import job_description
+    from spark_extension_spark.utils import UnpersistHandle
+
+    def cached_ids():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    chain = spark.createDataFrame([(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"])
+    cc_stats_log(clear=True)
+    jobs_before, cached_before = set(_job_descriptions(spark)), cached_ids()
+    h = UnpersistHandle()
+    with job_description("caller"):
+        out = connected_components(chain, check_every=2, unpersist_handle=h)
+    labels = {
+        d for j, d in _job_descriptions(spark).items() if j not in jobs_before
+    }
+    assert labels == {
+        f"caller - connected_components:{phase}" for phase in ("edges", "local", "result")
+    }
+    # one hooking round points every node at 1, a second proves it
+    assert cc_stats_log(clear=True) == [
+        {"algorithm": "local", "iterations": 2, "max_iterations": 50, "converged": True}
+    ]
+    assert sorted(map(tuple, out.collect())) == [(i, 1) for i in range(1, 6)]
+    h(blocking=True)
+    assert cached_ids() <= cached_before
+
+    # without a handle: no warning, and the result survives the loss of
+    # its cache, since it rests on no freed checkpoint
+    with _warnings.catch_warnings(record=True) as w:
+        _warnings.simplefilter("always")
+        out = connected_components(chain)
+    assert not [x for x in w if "single-use" in str(x.message)]
+    want = sorted(map(tuple, out.collect()))
+    out.unpersist(True)
+    assert sorted(map(tuple, out.collect())) == want
+    cc_stats_log(clear=True)
+
+    # the loop's limits do not apply: a 40-node path converges on the
+    # driver where two label steps could not
+    path = spark.createDataFrame([(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"])
+    got = connected_components(path, max_iterations=2, check_every=1, warn_single_use=False)
+    assert {r["cluster_id"] for r in got.collect()} == {1}
+    assert cc_stats_log(clear=True)[0]["algorithm"] == "local"
+
+    # double ids are not admitted (-0.0/0.0, NaN): the loop runs
+    doubles = spark.createDataFrame([(2.0, 1.5), (3.0, 2.0)], ["id_a", "id_b"])
+    got = connected_components(doubles, warn_single_use=False)
+    assert {r["id"]: r["cluster_id"] for r in got.collect()} == {1.5: 1.5, 2.0: 1.5, 3.0: 1.5}
+    assert [e["algorithm"] for e in cc_stats_log(clear=True)] == ["label"]
+
+    # the declared schema (types and nullability) is the loop's
+    for schema in ("id_a long, id_b long", "id_a string, id_b string", "id_a date, id_b date"):
+        edges = spark.createDataFrame([], schema)
+        local = connected_components(edges, warn_single_use=False).schema
+        monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", -1)
+        assert connected_components(edges, warn_single_use=False).schema == local, schema
+        monkeypatch.undo()
+    cc_stats_log(clear=True)
+
+
+@pytest.mark.parametrize(
+    "kw, match",
+    [
+        ({"algorithm": "lable"}, "unknown algorithm"),
+        ({"check_every": 0}, "check_every must be >= 1"),
+        ({"max_iterations": 0}, "max_iterations must be >= 1"),
+    ],
+)
+def test_connected_components_validates_before_spark_work(spark, kw, match):
+    # a bad argument raises before the upstream pair pipeline runs
+    from spark_extension_spark import connected_components
+
+    edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
+    before = set(_job_descriptions(spark))
+    with pytest.raises(ValueError, match=match):
+        connected_components(edges, warn_single_use=False, **kw)
+    assert set(_job_descriptions(spark)) == before
 
 
 @pytest.mark.parametrize("check_every", [3, 5])
-def test_connected_components_batch_plan_linear(spark, monkeypatch, check_every):
+def test_connected_components_batch_plan_linear(spark, monkeypatch, cc_loop, check_every):
     # each label step reads the previous state once (self-looped edges),
     # so a batch of k steps references the edge cache k times; the
     # former union-based step doubled it per step (15 at k=3, 63 at k=5)
@@ -369,25 +497,13 @@ def test_connected_components_batch_plan_linear(spark, monkeypatch, check_every)
     assert refs == [check_every] * -(-12 // check_every)
 
 
-def test_connected_components_job_labels(spark):
+def test_connected_components_job_labels(spark, cc_loop):
     # every job the label loop launches names its phase; the caller's
     # description stays as the prefix
     from spark_extension_spark import connected_components
     from spark_extension_spark.session import job_description
 
-    sc = spark.sparkContext._jsc.sc()
-
-    def job_descriptions():
-        sc.listenerBus().waitUntilEmpty()
-        jobs = sc.statusStore().jobsList(None)
-        out = {}
-        for i in range(jobs.size()):
-            job = jobs.apply(i)
-            d = job.description()
-            out[job.jobId()] = d.get() if d.isDefined() else None
-        return out
-
-    before = set(job_descriptions())
+    before = set(_job_descriptions(spark))
     # diameter 4 at check_every=2: converges in the third batch
     edges = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"]
@@ -395,7 +511,7 @@ def test_connected_components_job_labels(spark):
     with job_description("caller"):
         connected_components(edges, check_every=2, warn_single_use=False)
     labels = {
-        d for j, d in job_descriptions().items() if j not in before
+        d for j, d in _job_descriptions(spark).items() if j not in before
     }
     assert labels == {
         f"caller - connected_components:{phase}"
@@ -407,14 +523,14 @@ def test_connected_components_job_labels(spark):
     from spark_extension_spark import cc_stats_log
 
     cc_stats_log(clear=True)
-    before = set(job_descriptions())
+    before = set(_job_descriptions(spark))
     with job_description("caller"):
         connected_components(edges, algorithm="star", warn_single_use=False)
     (stats,) = cc_stats_log(clear=True)
     rounds = stats["iterations"]
     assert rounds >= 2
     labels = {
-        d for j, d in job_descriptions().items() if j not in before
+        d for j, d in _job_descriptions(spark).items() if j not in before
     }
     assert labels == {
         f"caller - connected_components:{phase}"
@@ -679,7 +795,7 @@ def test_dedup_keep_best_self_computed_pairs(spark, docs):
     assert len(kept & {1, 2, 3}) == 1
 
 
-def test_precomputed_clusters_shared_across_consumers(spark, docs):
+def test_precomputed_clusters_shared_across_consumers(spark, docs, cc_loop):
     # the share-one-CC hook: run connected components ONCE, feed the
     # result to both keep-best and leakage-safe splits; outputs must be
     # identical to each consumer computing its own clustering, and the
@@ -1209,6 +1325,7 @@ class TestLabelPropagation:
             label_propagation(df, iterations=0)
 
 
+@pytest.mark.usefixtures("cc_loop")
 class TestCheckpointLifecycle:
     # round-6 contract: the FINAL checkpoint generation's lifetime
     # follows the unpersist handle — kept (result recomputable) until
@@ -1287,7 +1404,7 @@ class TestCheckpointLifecycle:
             UnpersistHandle()()
 
 
-def test_connected_components_single_use_warning_controls(spark):
+def test_connected_components_single_use_warning_controls(spark, cc_loop):
     import warnings as _warnings
 
     from spark_extension_spark import connected_components
@@ -1313,7 +1430,7 @@ def test_connected_components_single_use_warning_controls(spark):
     h()
 
 
-def test_composed_dedup_ops_forward_warn_flag(spark):
+def test_composed_dedup_ops_forward_warn_flag(spark, cc_loop):
     import warnings as _warnings
 
     from spark_extension_spark.operators.dedup import near_dup_clusters
