@@ -23,13 +23,7 @@ from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DateType,
-    IntegralType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DateType, IntegralType, StructField, StructType
 
 from ..session import append_job_description
 from ..utils import (
@@ -610,9 +604,10 @@ def _record_cc_stats(
 # Symmetric edge sets (``sym`` rows: both directions plus one self-loop
 # per node) of at most this many rows are labelled on the driver by
 # _cc_local; larger ones run the distributed loop.  Measured on piles
-# of 5-cliques (diameter 1: the loop's best case, one batch), a whole
-# connected_components call over a cached edge list, median of 3,
-# local[4] on 4 vCPUs, 4 GB driver heap (PLANS.md "Round-17"):
+# of 5-cliques with long ids (diameter 1: the loop's best case, one
+# batch), a whole connected_components call over a cached edge list,
+# median of 3, local[4] on 4 vCPUs, 4 GB driver heap (PLANS.md
+# "Round-17"):
 #
 #   sym rows   loop s   local s   toArrow / union-find /   driver RSS MB,
 #                                 createDataFrame s        python / JVM
@@ -630,13 +625,13 @@ _CC_LOCAL_MAX_EDGES = 2_000_000
 
 
 def _cc_local_admits(dtype) -> bool:
-    """Id types whose Arrow sort order is Spark's: integers compare by
-    value in both, UTF-8-binary strings by unsigned bytes in both, and
-    dates by their day number.  Floating-point ids (``-0.0``/``0.0``,
-    NaN), decimals, timestamps and collated strings stay on the loop."""
-    return isinstance(dtype, (IntegralType, DateType)) or (
-        type(dtype) is StringType and dtype.isUTF8BinaryCollation()
-    )
+    """Id types whose Arrow sort order is Spark's and whose width is
+    fixed, so the row bound is also a byte bound: integers compare by
+    value in both, dates by their day number.  Strings (unbounded
+    width: the row bound says nothing about the bytes collected),
+    floating-point ids (``-0.0``/``0.0``, NaN), decimals and timestamps
+    stay on the loop."""
+    return isinstance(dtype, (IntegralType, DateType))
 
 
 def _min_label_ranks(n: int, a, b) -> Tuple["np.ndarray", int]:
@@ -895,10 +890,9 @@ def connected_components(
 
     Small edge sets finish on the driver: when the symmetric edge set
     (both directions plus one self-loop per node) has at most
-    ``_CC_LOCAL_MAX_EDGES`` rows and the ids are integers, UTF-8-binary
-    strings or dates, it is collected with ``toArrow()`` and labelled by
-    a numpy union-find, with the same labels either algorithm gives
-    (jobs ``:edges``, ``:local``, ``:result``).  Everything below about
+    ``_CC_LOCAL_MAX_EDGES`` rows and the ids are integers or dates, it
+    is collected with ``toArrow()`` and labelled by a numpy union-find,
+    with the same labels either algorithm gives (jobs ``:edges``, ``:local``, ``:result``).  Everything below about
     batches, checkpoints and ``max_iterations``/``check_every`` applies
     to the distributed loop that larger edge sets and other id types
     run; the driver-side path always converges.

@@ -149,28 +149,38 @@ def test_connected_components_empty(spark):
     assert connected_components(edges, warn_single_use=False).count() == 0
 
 
-def test_connected_components_star_matches_label(spark):
+def test_connected_components_star_matches_label(spark, monkeypatch):
     from spark_extension_spark import connected_components
+    from spark_extension_spark.operators import dedup
+    from spark_extension_spark.operators.dedup import cc_stats_log
 
-    # chain + clique + isolated pair; both algorithms must agree exactly
+    # chain + clique + isolated pair; both algorithms must agree exactly,
+    # on the driver-side path and on the distributed loops
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
          (10, 11), (10, 12), (11, 12), (20, 21)],
         ["id_a", "id_b"],
     )
-    label = {r["id"]: r["cluster_id"]
-             for r in connected_components(edges, algorithm="label", warn_single_use=False).collect()}
-    star = {r["id"]: r["cluster_id"]
-            for r in connected_components(edges, algorithm="star", warn_single_use=False).collect()}
-    assert label == star
-    assert star[6] == 1 and star[12] == 10 and star[21] == 20
+    bound = dedup._CC_LOCAL_MAX_EDGES
+    for local in (True, False):
+        monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", bound if local else 0)
+        cc_stats_log(clear=True)
+        label = {r["id"]: r["cluster_id"]
+                 for r in connected_components(edges, algorithm="label", warn_single_use=False).collect()}
+        star = {r["id"]: r["cluster_id"]
+                for r in connected_components(edges, algorithm="star", warn_single_use=False).collect()}
+        want = ["local", "local"] if local else ["label", "star"]
+        assert [e["algorithm"] for e in cc_stats_log(clear=True)] == want
+        assert label == star
+        assert star[6] == 1 and star[12] == 10 and star[21] == 20
 
 
-def test_connected_components_star_long_chain(spark):
+def test_connected_components_star_long_chain(spark, cc_loop):
     from spark_extension_spark import connected_components
 
     # diameter-100 chain: label propagation would need ~100 steps; star
     # contraction converges in O(log^2 n) rounds well inside the limit
+    # (the loop runs: the driver-side path ignores max_iterations)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], ["id_a", "id_b"]
     )
@@ -179,10 +189,11 @@ def test_connected_components_star_long_chain(spark):
     assert got.count() == 101
 
 
-def test_connected_components_check_every_batching(spark):
+def test_connected_components_check_every_batching(spark, cc_loop):
     from spark_extension_spark import connected_components
 
-    # check_every larger than the diameter: still converges and is exact
+    # check_every larger than the diameter: the loop still converges and
+    # is exact
     edges = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"]
     )
@@ -361,13 +372,13 @@ def test_connected_components_match_union_find(spark, monkeypatch):
         star, _ = run(edges, "id_a long, id_b long", False, algorithm="star")
         assert star == want, seed
 
-    # string ids: ordered as strings, by UTF-8 bytes ("z" < "é", "Z" < "ä")
+    # string ids (the loop only): ordered as strings, by UTF-8 bytes
+    # ("z" < "é", "Z" < "ä")
     words = [("m", "k"), ("k", "c"), ("c", "c"), ("x", "q"), ("q", "x"), ("z", "z"),
              ("é", "z"), ("ä", "Z")]
     for check_every in (1, 2, 3):
         got, _ = run(words, "id_a string, id_b string", False, check_every=check_every)
         assert got == _union_find_labels(words)
-    assert run(words, "id_a string, id_b string", True)[0] == _union_find_labels(words)
     # a null id links nothing and takes its neighbours' smallest label
     # (the star algorithm gives it a null label instead, on either path)
     nulls = [(5, 4), (4, 3), (None, 5), (9, None), (9, 8), (None, None), (7, 7)]
@@ -435,14 +446,19 @@ def test_connected_components_local_path(spark, monkeypatch):
     assert {r["cluster_id"] for r in got.collect()} == {1}
     assert cc_stats_log(clear=True)[0]["algorithm"] == "local"
 
-    # double ids are not admitted (-0.0/0.0, NaN): the loop runs
+    # double ids are not admitted (-0.0/0.0, NaN), nor strings (no
+    # width limit, so the row bound does not bound the bytes collected):
+    # the loop runs
     doubles = spark.createDataFrame([(2.0, 1.5), (3.0, 2.0)], ["id_a", "id_b"])
     got = connected_components(doubles, warn_single_use=False)
     assert {r["id"]: r["cluster_id"] for r in got.collect()} == {1.5: 1.5, 2.0: 1.5, 3.0: 1.5}
-    assert [e["algorithm"] for e in cc_stats_log(clear=True)] == ["label"]
+    strings = spark.createDataFrame([("b", "a"), ("c", "b")], ["id_a", "id_b"])
+    got = connected_components(strings, warn_single_use=False)
+    assert {r["id"]: r["cluster_id"] for r in got.collect()} == {"a": "a", "b": "a", "c": "a"}
+    assert [e["algorithm"] for e in cc_stats_log(clear=True)] == ["label", "label"]
 
     # the declared schema (types and nullability) is the loop's
-    for schema in ("id_a long, id_b long", "id_a string, id_b string", "id_a date, id_b date"):
+    for schema in ("id_a long, id_b long", "id_a int, id_b int", "id_a date, id_b date"):
         edges = spark.createDataFrame([], schema)
         local = connected_components(edges, warn_single_use=False).schema
         monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", -1)

@@ -308,18 +308,24 @@ def _union_find_labels(edges):
 @given(edges=EDGES)
 @SETTINGS
 def test_connected_components_matches_union_find(spark, edges):
+    from unittest import mock
+
     from spark_extension_spark import connected_components
+    from spark_extension_spark.operators import dedup
 
     df = spark.createDataFrame(edges, "id_a int, id_b int")
     want = _union_find_labels(edges)
-    for algorithm in ("label", "star"):
-        got = {
-            r["id"]: r["cluster_id"]
-            for r in connected_components(
-                df, algorithm=algorithm, warn_single_use=False
-            ).collect()
-        }
-        assert got == want, f"{algorithm}: {got} != {want}"
+    # bound 0 sends the edge set to the distributed loop
+    for bound in (dedup._CC_LOCAL_MAX_EDGES, 0):
+        with mock.patch.object(dedup, "_CC_LOCAL_MAX_EDGES", bound):
+            for algorithm in ("label", "star"):
+                got = {
+                    r["id"]: r["cluster_id"]
+                    for r in connected_components(
+                        df, algorithm=algorithm, warn_single_use=False
+                    ).collect()
+                }
+                assert got == want, f"{algorithm}, bound {bound}: {got} != {want}"
 
 
 # -- as-of join vs pandas merge_asof ------------------------------------------
