@@ -96,19 +96,17 @@ def with_quality(d):
 
 def b_near_dup(d):
     pairs = D.ngram_jaccard_pairs(d, n=3, threshold=0.6)
-    return D.near_dup_clusters(pairs, warn_single_use=False)
+    return D.near_dup_clusters(pairs)
 
 
 def b_keep_best(d):
-    return D.dedup_keep_best(
-        with_quality(d), "quality", n=3, threshold=0.6, warn_single_use=False
-    )
+    return D.dedup_keep_best(with_quality(d), "quality", n=3, threshold=0.6)
 
 
 def b_splits(d):
     return D.leakage_safe_splits(
         d, {"train": 0.9, "val": 0.05, "test": 0.05}, n=3, threshold=0.6,
-        seed=42, warn_single_use=False,
+        seed=42,
     ).select("doc_id", "cluster_id", "split")
 
 
@@ -142,7 +140,7 @@ for name, build, src, tiny in (
 pairs = D.ngram_jaccard_pairs(docs, n=3, threshold=0.6).persist()
 out["stages"] = {
     "pairs": pairs.count(),
-    "clusters": D.near_dup_clusters(pairs, warn_single_use=False)
+    "clusters": D.near_dup_clusters(pairs)
     .where(F.col("doc_id") == F.col("cluster_id"))
     .count(),
 }

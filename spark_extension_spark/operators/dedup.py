@@ -18,7 +18,6 @@ Scale design (100 TB documents):
 from __future__ import annotations
 
 import threading
-import warnings
 from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Window
@@ -606,21 +605,22 @@ def _record_cc_stats(
 # _cc_local; larger ones run the distributed loop.  Measured on piles
 # of 5-cliques with long ids (diameter 1: the loop's best case, one
 # batch), a whole connected_components call over a cached edge list,
-# median of 3, local[4] on 4 vCPUs, 4 GB driver heap (PLANS.md
-# "Round-17"):
+# then one count of its result, median of 3, local[4] on 4 vCPUs, 4 GB
+# driver heap (PLANS.md "Round-18"):
 #
-#   sym rows   loop s   local s   toArrow / union-find /   driver RSS MB,
-#                                 createDataFrame s        python / JVM
-#     10,000     1.56      0.91   0.10 / 0.00 / 0.02         +5 / 1028
-#    100,000     2.39      1.08   0.09 / 0.00 / 0.05        +14 / 1503
-#  1,000,000     3.93      2.70   0.22 / 0.03 / 0.14        +69 / 1404
-#  2,000,000     5.84      4.06   0.20 / 0.06 / 0.29       +136 / 2861
-#  4,000,000     9.58      8.98   0.38 / 0.24 / 0.67       +266 / 2952
+#   sym rows   call s          count s        local toArrow /     local
+#              loop / local    loop / local   union-find /        python
+#                                             createDataFrame s   RSS MB
+#  1,000,000   4.34 / 2.10     0.11 / 0.69    0.37 / 0.05 / 0.20    +60
+#  2,000,000   6.30 / 3.94     0.11 / 1.20    0.57 / 0.10 / 0.55   +109
+#  4,000,000   9.26 / 5.93     0.09 / 2.36    0.51 / 0.21 / 0.76   +212
 #
-# (loop JVM RSS: 1269, 1375, 1644, 1814, 2171 MB.)  At 4M rows the
-# local path no longer wins and the driver holds ~0.8 GB more; the
-# bound sits at 2M.  Both paths share the sym build and the result
-# count, which are most of the local path's time.
+# A count of the local result scans the table createDataFrame built, a
+# count of the loop's reads its checkpoint.  The local path still wins
+# call plus count at 4M rows here (the round-17 table put the crossover
+# near 4M; it does not reproduce).  The bound stays at 2M, where the
+# driver holds half as much, until a measurement above 4M places the
+# crossover.
 _CC_LOCAL_MAX_EDGES = 2_000_000
 
 
@@ -703,7 +703,7 @@ def _cc_local(sym: DataFrame, algorithm: str, max_iterations: int) -> DataFrame:
 
 def _cc_label_propagation(
     sym: DataFrame, max_iterations: int, check_every: int,
-    cycler: Optional[LocalCheckpointCycler] = None,
+    cycler: LocalCheckpointCycler,
 ) -> DataFrame:
     """Min-label propagation over persisted symmetric edges ``sym``
     (columns ``src``, ``dst``, hash-partitioned on ``src`` by the
@@ -742,12 +742,10 @@ def _cc_label_propagation(
     failure recomputes.  (``persist`` caches data but keeps the full
     lineage.)  The ``cycler`` frees each superseded checkpoint
     generation as the next one lands (each batch reads only the
-    previous labels, so lag 1)."""
+    previous labels, so lag 1).  The returned labels are a projection
+    of the final checkpoint, which the caller keeps live."""
     from pyspark.sql import Observation
 
-    ck = cycler.checkpoint if cycler is not None else (
-        lambda df: df.localCheckpoint(eager=True)
-    )
     labels = None
     steps_done = 0
     while steps_done < max_iterations:
@@ -772,7 +770,7 @@ def _cc_label_propagation(
         changed = F.count(F.when(F.col("label") < F.col("__old"), 1))
         n = steps_done // check_every + 1
         with append_job_description(f"connected_components:batch{n}"):
-            labels = ck(labels.observe(obs, changed.alias("changed")))
+            labels = cycler.checkpoint(labels.observe(obs, changed.alias("changed")))
         steps_done += batch
         if obs.get["changed"] == 0:
             _record_cc_stats("label", steps_done, max_iterations)
@@ -786,8 +784,7 @@ def _cc_label_propagation(
 
 
 def _cc_star(
-    sym: DataFrame, max_iterations: int,
-    cycler: Optional[LocalCheckpointCycler] = None,
+    sym: DataFrame, max_iterations: int, cycler: LocalCheckpointCycler
 ) -> DataFrame:
     """Alternating large-star / small-star contraction (Kiveris et al.,
     "Connected Components in MapReduce and Beyond").  Converges in
@@ -800,16 +797,16 @@ def _cc_star(
     ends in ``localCheckpoint(eager=True)`` — each round references the
     previous edge set ~4×, so without lineage truncation the plan grows
     as 4^rounds and plan analysis OOMs the driver (``persist`` does not
-    truncate lineage).
+    truncate lineage).  The result, ``nodes ⋈ work``, is checkpointed
+    too (job ``:result``): its lineage otherwise reaches ``sym``, which
+    the caller unpersists.
     """
     # lag 3: checkpoints land as w0, lg1, s1, lg2, s2, …, and the
     # convergence delta after ck(s_r) still joins s_r against the
     # previous round's work set s_{r-1} — two generations back at that
     # moment — so the newest THREE generations must stay live; freeing
     # at lag 3 only ever drops lg_{r-1} / s_{r-2}, both dead by then
-    ck = cycler.checkpoint if cycler is not None else (
-        lambda df: df.localCheckpoint(eager=True)
-    )
+    ck = cycler.checkpoint
     # high→low orientation; drop self-loops
     with append_job_description("connected_components:star0"):
         work = ck(
@@ -858,13 +855,14 @@ def _cc_star(
             _record_cc_stats("star", round_ + 1, max_iterations)
             # stars: every non-root points straight at its component
             # minimum; roots (the minima) have no outgoing edge
-            return (
-                nodes.join(work, nodes["id"] == work["u"], "left")
-                .select(
-                    "id",
-                    F.coalesce(F.col("v"), F.col("id")).alias("cluster_id"),
+            with append_job_description("connected_components:result"):
+                return ck(
+                    nodes.join(work, nodes["id"] == work["u"], "left")
+                    .select(
+                        "id",
+                        F.coalesce(F.col("v"), F.col("id")).alias("cluster_id"),
+                    )
                 )
-            )
     _record_cc_stats("star", max_iterations, max_iterations, converged=False)
     raise RuntimeError(
         f"connected_components(star) did not converge in "
@@ -880,8 +878,6 @@ def connected_components(
     check_every: int = 3,
     algorithm: str = "label",
     unpersist_handle: Optional[UnpersistHandle] = None,
-    warn_single_use: bool = True,
-    _warn_stacklevel: int = 2,
 ) -> DataFrame:
     """Connected components over an undirected edge list: one row per
     node with ``cluster_id`` = the smallest node id reachable from it.
@@ -892,10 +888,11 @@ def connected_components(
     (both directions plus one self-loop per node) has at most
     ``_CC_LOCAL_MAX_EDGES`` rows and the ids are integers or dates, it
     is collected with ``toArrow()`` and labelled by a numpy union-find,
-    with the same labels either algorithm gives (jobs ``:edges``, ``:local``, ``:result``).  Everything below about
-    batches, checkpoints and ``max_iterations``/``check_every`` applies
-    to the distributed loop that larger edge sets and other id types
-    run; the driver-side path always converges.
+    with the same labels either algorithm gives (jobs ``:edges`` and
+    ``:local``).  Everything below about batches, checkpoints and
+    ``max_iterations``/``check_every`` applies to the distributed loop
+    that larger edge sets and other id types run; the driver-side path
+    always converges.
 
     ``algorithm='label'`` (default): min-label propagation — each step
     is one equi-join + one min-aggregate keyed by node id; steps needed
@@ -912,46 +909,31 @@ def connected_components(
     syncs) or ``algorithm='star'``.  Iteration state is
     ``localCheckpoint``-ed once per batch to keep lineage bounded; on a
     fault-tolerance-critical cluster job, set a checkpoint dir and swap
-    in reliable ``checkpoint()``.  Every job this algorithm launches
-    carries the description ``connected_components:edges``,
-    ``:batch{i}`` or ``:result``, appended to the caller's own.
+    in reliable ``checkpoint()``.  Its jobs are labelled ``:edges`` and
+    ``:batch{i}``, appended to the caller's own description.
 
     ``algorithm='star'``: alternating large-star / small-star
     contraction, O(log^2 n) rounds on any graph — use for adversarial
     long-chain graphs where diameter-many label steps would be slow.
     Its jobs are labelled ``:edges``, ``:star0`` (orienting the edge
-    set), ``:star{r}`` for round r, and ``:result``.
+    set), ``:star{r}`` for round r, and ``:result`` (checkpointing the
+    labels).
 
     The (possibly expensive) upstream ``edges`` pipeline is read
     exactly once: symmetrization explodes each edge into both
     directions in a single pass (a union of two scans would recompute
     the full pair-generation DAG per branch), and the symmetric edge
-    set is persisted and forced before the loop.
-    The returned labels are persisted (already materialized — reading
-    them costs nothing); pass an ``unpersist_handle`` to release that
-    cache when done, as with the other persisting dedup operators.
-    On the loop, per-round ``localCheckpoint`` generations are freed as
-    they are superseded (:class:`~spark_extension_spark.utils.
-    LocalCheckpointCycler`).  The FINAL generation backs the returned
-    labels' lineage, and its lifetime follows the handle: with an
-    ``unpersist_handle`` it stays live until the handle fires (the
-    result remains recomputable after cache-block loss), and the handle
-    call then returns storage fully to baseline — firing it declares
-    the caller done; the result is spent after that.  Without a handle
-    the final generation is freed immediately — the labels are already
-    materialized in the persisted result, but if that cache is later
-    dropped (manual ``unpersist``, executor failure) a re-run fails
-    with a missing-checkpoint-block error: treat the no-handle result
-    as single-use-per-materialization, or pass a handle.  On a mid-loop
-    failure every generation is freed before the exception propagates.
-    The driver-side path checkpoints nothing: its result is recomputable
-    with or without a handle, and it gives no warning.
-
-    ``warn_single_use=False`` suppresses the loop's no-handle runtime
-    warning — for callers that consume the labels immediately (one
-    action, then done) and accept the single-use contract knowingly.
-    ``_warn_stacklevel`` lets the composed operators that wrap this one
-    point the warning at *their* caller instead of library internals.
+    set is persisted and forced before the labelling, then released.
+    The result never reads it again: the driver-side path returns an
+    in-memory frame, and the loop returns a projection of its final
+    ``localCheckpoint`` generation.  As with :func:`~.graph.pagerank`,
+    superseded generations are freed as the loop goes
+    (:class:`~spark_extension_spark.utils.LocalCheckpointCycler`); the
+    final one stays live while the result is referenced, so the result
+    is recomputable, and falls to the ContextCleaner after.  An
+    ``unpersist_handle`` frees it when fired (the result is spent after
+    that).  On a mid-loop failure every generation is freed before the
+    exception propagates.
     """
     # checked before any Spark work: a bad argument must not first run
     # the upstream pair pipeline
@@ -1000,67 +982,29 @@ def connected_components(
     )
     with append_job_description("connected_components:edges"):
         n = sym.count()  # force once: later consumers read the warm cache
-    spark = edges.sparkSession
-    cycler = None
-    ok = False
+    cycler = LocalCheckpointCycler(
+        edges.sparkSession, lag=3 if algorithm == "star" else 1
+    )
     try:
-        id_type = sym.schema["src"].dataType
-        if n <= _CC_LOCAL_MAX_EDGES and _cc_local_admits(id_type):
+        if n <= _CC_LOCAL_MAX_EDGES and _cc_local_admits(sym.schema["src"].dataType):
             out = _cc_local(sym, algorithm, max_iterations)
         elif algorithm == "star":
-            cycler = LocalCheckpointCycler(spark, lag=3)
             out = _cc_star(sym, max_iterations, cycler)
         else:
-            cycler = LocalCheckpointCycler(spark, lag=1)
             out = _cc_label_propagation(sym, max_iterations, check_every, cycler)
-        # force the result before releasing the inputs below — otherwise
-        # the caller's first action would recompute the whole upstream
-        # edge pipeline with every cache already dropped
-        out = out.persist()
-        if unpersist_handle is not None:
-            unpersist_handle.add_dataframe(out)
-        with append_job_description("connected_components:result"):
-            out.count()
-        ok = True
-        return out
+    except BaseException:
+        # non-convergence or a mid-loop error: nothing escapes the loop
+        cycler.release()
+        raise
     finally:
         sym.unpersist()
-        if cycler is not None:
-            if not ok:
-                # failure path (non-convergence, mid-loop error):
-                # nothing escapes the loop — free every generation now
-                # instead of leaking them until ContextCleaner GC
-                cycler.release()
-            elif unpersist_handle is not None:
-                # keep the final generation (it backs `out`'s lineage —
-                # see docstring) until the caller's handle fires; the
-                # handle call then returns storage fully to baseline
-                cycler.release_superseded()
-                unpersist_handle.add_callback(cycler.release)
-            else:
-                # no handle: free everything now.  The persisted result
-                # is already materialized; only a later cache-block loss
-                # would need the freed checkpoint (documented).  Keeping
-                # it would accumulate one generation per call with no
-                # release point — measured as session-wide storage
-                # pressure across a 149-query benchmark.  The warning
-                # makes the single-use contract discoverable at runtime
-                # (dedupes per call site by the default warnings filter).
-                if warn_single_use:
-                    warnings.warn(
-                        "connected_components called without"
-                        " unpersist_handle: the returned labels are"
-                        " single-use-per-materialization — if their"
-                        " cache is later dropped (manual unpersist,"
-                        " executor loss) recomputation fails with a"
-                        " missing-checkpoint-block error. Pass an"
-                        " UnpersistHandle to keep the result"
-                        " recomputable until you are done with it, or"
-                        " warn_single_use=False to accept the contract"
-                        " silently.",
-                        stacklevel=_warn_stacklevel,
-                    )
-                cycler.release()
+    # the newest generation backs the returned labels' lineage and
+    # cannot be freed here; the caller's handle frees it when done (the
+    # driver-side path checkpoints nothing, so its callback frees nothing)
+    cycler.release_superseded()
+    if unpersist_handle is not None:
+        unpersist_handle.add_callback(cycler.release)
+    return out
 
 
 def near_dup_clusters(
@@ -1069,26 +1013,17 @@ def near_dup_clusters(
     id_b: str = "id_b",
     max_iterations: int = 50,
     unpersist_handle: Optional[UnpersistHandle] = None,
-    warn_single_use: bool = True,
-    _warn_stacklevel: int = 3,
 ) -> DataFrame:
     """Cluster assignment (``doc_id``, ``cluster_id``) for every document
     appearing in a near-duplicate pair list; ``cluster_id`` is the
     smallest doc id in the component, so "keep the representative" is
-    ``WHERE doc_id = cluster_id`` and "drop the rest" is the negation.
-
-    No-handle results of the distributed loop inherit
-    :func:`connected_components`' single-use contract (and its runtime
-    warning; ``warn_single_use=False`` accepts the contract silently);
-    a pair list small enough for the driver-side path has neither."""
+    ``WHERE doc_id = cluster_id`` and "drop the rest" is the negation."""
     return connected_components(
         pairs,
         src=id_a,
         dst=id_b,
         max_iterations=max_iterations,
         unpersist_handle=unpersist_handle,
-        warn_single_use=warn_single_use,
-        _warn_stacklevel=_warn_stacklevel,
     ).select(F.col("id").alias("doc_id"), "cluster_id")
 
 
@@ -1196,7 +1131,6 @@ def dedup_keep_best(
     max_shingle_freq: Optional[int] = 1000,
     clusters: Optional[DataFrame] = None,
     unpersist_handle: Optional[UnpersistHandle] = None,
-    warn_single_use: bool = True,
 ) -> DataFrame:
     """End-to-end near-dedup keeping the *best* document per duplicate
     cluster (highest ``quality_col``; ties go to the smallest id) —
@@ -1220,8 +1154,9 @@ def dedup_keep_best(
     Returns the surviving input rows plus ``cluster_id`` (smallest id
     in the component) and ``cluster_size``.  ``quality_col`` must be
     non-null and ``id_col`` numeric.  Every frame persisted along the
-    way (shingle postings, cluster labels, the labeled corpus)
-    registers on ``unpersist_handle`` — one call releases them all.
+    way (shingle postings, the labeled corpus) and the clustering's
+    final checkpoint register on ``unpersist_handle`` — one call
+    releases them all.
 
     Scale shape: the clustering is :func:`connected_components` (its
     scaling notes apply); everything after runs over the PAIRED-doc
@@ -1240,10 +1175,7 @@ def dedup_keep_best(
                 max_shingle_freq=max_shingle_freq,
                 unpersist_handle=unpersist_handle,
             ).select("id_a", "id_b")
-        clusters = near_dup_clusters(
-            pairs, unpersist_handle=unpersist_handle,
-            warn_single_use=warn_single_use, _warn_stacklevel=4,
-        )
+        clusters = near_dup_clusters(pairs, unpersist_handle=unpersist_handle)
     clusters = clusters.withColumnRenamed("doc_id", id_col)
     # Only documents that appear in a PAIR can lose (round 13): the
     # cluster map covers exactly the paired docs, so the per-cluster
@@ -1298,7 +1230,6 @@ def leakage_safe_splits(
     max_iterations: int = 50,
     clusters: Optional[DataFrame] = None,
     unpersist_handle: Optional[UnpersistHandle] = None,
-    warn_single_use: bool = True,
 ) -> DataFrame:
     """Train/validation/test assignment that near-duplicates can never
     straddle: the frozen hash draw is keyed on the document's near-dup
@@ -1332,8 +1263,7 @@ def leakage_safe_splits(
                 unpersist_handle=unpersist_handle,
             ).select("id_a", "id_b")
         clusters = near_dup_clusters(
-            pairs, max_iterations=max_iterations, unpersist_handle=unpersist_handle,
-            warn_single_use=warn_single_use, _warn_stacklevel=4,
+            pairs, max_iterations=max_iterations, unpersist_handle=unpersist_handle
         )
     clusters = clusters.withColumnRenamed("doc_id", id_col)
     labeled = df.join(clusters, id_col, "left").withColumn(

@@ -922,7 +922,6 @@ def semantic_dedup(
     max_cell_size: Optional[int] = 10_000,
     target_cell_size: int = 4096,
     unpersist_handle=None,
-    warn_single_use: bool = True,
 ) -> DataFrame:
     """Full semantic-dedup decision per vector: (id, ``cluster_id``,
     ``keep``) — ``cluster_id`` the smallest id in the vector's
@@ -938,13 +937,8 @@ def semantic_dedup(
     within connected components' driver-side bound.
     Cell sizing / cap accounting as in :func:`semantic_near_dup_pairs`.
 
-    The cluster labels persist internally; pass an
-    :class:`~spark_extension_spark.utils.UnpersistHandle` to release
-    that cache (and keep the result recomputable) — without one, when
-    the pairs run the distributed loop, the output inherits
-    :func:`~.dedup.connected_components`' single-use contract and its
-    runtime warning (a pair set small enough for the driver-side path
-    has neither)."""
+    ``unpersist_handle`` frees what connected components keeps live for
+    the result (see :func:`~.dedup.connected_components`)."""
     from .dedup import connected_components
 
     pairs = semantic_near_dup_pairs(
@@ -952,8 +946,7 @@ def semantic_dedup(
         target_cell_size,
     )
     labels = connected_components(
-        pairs, src="id_a", dst="id_b", unpersist_handle=unpersist_handle,
-        warn_single_use=warn_single_use, _warn_stacklevel=3,
+        pairs, src="id_a", dst="id_b", unpersist_handle=unpersist_handle
     )
     return (
         df.select(F.col(id_col))

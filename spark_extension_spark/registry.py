@@ -1697,9 +1697,7 @@ def q_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _dedup.ngram_jaccard_pairs(
         _docs_with_near_dups(spark, sf_dir), n=3, threshold=0.6
     )
-    # the gate collects immediately — single-use is the intended
-    # lifecycle, so accept the contract without the runtime warning
-    return _dedup.near_dup_clusters(pairs, warn_single_use=False)
+    return _dedup.near_dup_clusters(pairs)
 
 
 # ---------------------------------------------------------------------------
@@ -2011,8 +2009,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.similarity import semantic_dedup
 
     return semantic_dedup(
-        load(spark, sf_dir, "embeddings"), threshold=0.99, n_cells=16,
-        warn_single_use=False,
+        load(spark, sf_dir, "embeddings"), threshold=0.99, n_cells=16
     )
 
 
@@ -3220,9 +3217,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _docs_with_near_dups(spark, sf_dir).withColumn(
         "quality", F.length("text").cast("long")
     )
-    return _dedup.dedup_keep_best(
-        corpus, "quality", n=3, threshold=0.6, warn_single_use=False
-    )
+    return _dedup.dedup_keep_best(corpus, "quality", n=3, threshold=0.6)
 
 
 # ---------------------------------------------------------------------------
@@ -3544,8 +3539,7 @@ def q_cluster_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs_with_near_dups(spark, sf_dir)
     return leakage_safe_splits(
-        docs, _CLUSTER_SPLIT_WEIGHTS, n=3, threshold=0.6, seed=42,
-        warn_single_use=False,
+        docs, _CLUSTER_SPLIT_WEIGHTS, n=3, threshold=0.6, seed=42
     ).select("doc_id", "cluster_id", "split")
 
 

@@ -227,8 +227,8 @@ class LocalCheckpointCycler:
     lineage is gone), so only *superseded* generations are ever freed:
     ``checkpoint()`` frees the previous generation after the new one is
     eagerly materialized, and ``release()`` frees the final generation —
-    call it only once every consumer of the last checkpoint has
-    materialized (e.g. after persisting and forcing the loop's result).
+    call it only once every consumer of the last checkpoint is done
+    (e.g. from an ``UnpersistHandle`` callback the caller fires).
 
     Id tracking diffs ``JavaSparkContext.getPersistentRDDs`` around the
     checkpoint call, which assumes the driver is not concurrently

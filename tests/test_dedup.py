@@ -104,7 +104,7 @@ def cc_loop(monkeypatch):
     """Send every non-empty edge set to the distributed loop.  Small
     edge sets otherwise finish in one driver-side union-find
     (``_CC_LOCAL_MAX_EDGES``), and the tests that pin the loop's batch,
-    job, checkpoint and warning behaviour need the loop itself."""
+    job and checkpoint behaviour need the loop itself."""
     from spark_extension_spark.operators import dedup
 
     monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
@@ -129,7 +129,7 @@ def test_connected_components_two_clusters(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12)], ["id_a", "id_b"]
     )
-    got = {r["id"]: r["cluster_id"] for r in connected_components(edges, warn_single_use=False).collect()}
+    got = {r["id"]: r["cluster_id"] for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10}
 
 
@@ -138,7 +138,7 @@ def test_connected_components_chain_and_direction(spark):
 
     # labels must flow against edge direction too (symmetrization)
     edges = spark.createDataFrame([(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"])
-    got = {r["id"]: r["cluster_id"] for r in connected_components(edges, warn_single_use=False).collect()}
+    got = {r["id"]: r["cluster_id"] for r in connected_components(edges).collect()}
     assert set(got.values()) == {1}
 
 
@@ -146,7 +146,7 @@ def test_connected_components_empty(spark):
     from spark_extension_spark import connected_components
 
     edges = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components(edges, warn_single_use=False).count() == 0
+    assert connected_components(edges).count() == 0
 
 
 def test_connected_components_star_matches_label(spark, monkeypatch):
@@ -166,9 +166,9 @@ def test_connected_components_star_matches_label(spark, monkeypatch):
         monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", bound if local else 0)
         cc_stats_log(clear=True)
         label = {r["id"]: r["cluster_id"]
-                 for r in connected_components(edges, algorithm="label", warn_single_use=False).collect()}
+                 for r in connected_components(edges, algorithm="label").collect()}
         star = {r["id"]: r["cluster_id"]
-                for r in connected_components(edges, algorithm="star", warn_single_use=False).collect()}
+                for r in connected_components(edges, algorithm="star").collect()}
         want = ["local", "local"] if local else ["label", "star"]
         assert [e["algorithm"] for e in cc_stats_log(clear=True)] == want
         assert label == star
@@ -184,7 +184,7 @@ def test_connected_components_star_long_chain(spark, cc_loop):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], ["id_a", "id_b"]
     )
-    got = connected_components(edges, algorithm="star", max_iterations=15, warn_single_use=False)
+    got = connected_components(edges, algorithm="star", max_iterations=15)
     assert {r["cluster_id"] for r in got.collect()} == {0}
     assert got.count() == 101
 
@@ -198,7 +198,7 @@ def test_connected_components_check_every_batching(spark, cc_loop):
         [(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"]
     )
     got = {r["id"]: r["cluster_id"]
-           for r in connected_components(edges, check_every=5, warn_single_use=False).collect()}
+           for r in connected_components(edges, check_every=5).collect()}
     assert set(got.values()) == {1}
 
 
@@ -218,9 +218,7 @@ def test_connected_components_last_step_detection(spark, cc_loop):
     )
     got = {
         r["id"]: r["cluster_id"]
-        for r in connected_components(
-            edges, check_every=3, warn_single_use=False
-        ).collect()
+        for r in connected_components(edges, check_every=3).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1}
     (entry,) = cc_stats_log(clear=True)
@@ -238,11 +236,9 @@ def test_connected_components_stats_log(spark, cc_loop):
     edges = spark.createDataFrame(
         [(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"]
     )
-    connected_components(edges, check_every=2, warn_single_use=False).count()
+    connected_components(edges, check_every=2).count()
     star_edges = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
-    connected_components(
-        star_edges, algorithm="star", warn_single_use=False
-    ).count()
+    connected_components(star_edges, algorithm="star").count()
 
     log = cc_stats_log(clear=True)
     assert [e["algorithm"] for e in log] == ["label", "star"]
@@ -255,9 +251,7 @@ def test_connected_components_stats_log(spark, cc_loop):
     # a blown iteration budget is recorded too (converged=False), just
     # before the RuntimeError raises
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(
-            edges, max_iterations=1, check_every=1, warn_single_use=False
-        ).count()
+        connected_components(edges, max_iterations=1, check_every=1).count()
     (blown,) = cc_stats_log(clear=True)
     assert blown == {
         "algorithm": "label",
@@ -350,7 +344,7 @@ def test_connected_components_match_union_find(spark, monkeypatch):
         monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", bound if local else 0)
         cc_stats_log(clear=True)
         df = spark.createDataFrame(edges, schema)
-        out = connected_components(df, warn_single_use=False, **kw)
+        out = connected_components(df, **kw)
         got = {r["id"]: r["cluster_id"] for r in out.collect()}
         (entry,) = cc_stats_log(clear=True)
         assert (entry["algorithm"] == "local") == local
@@ -395,10 +389,8 @@ def test_connected_components_match_union_find(spark, monkeypatch):
 
 def test_connected_components_local_path(spark, monkeypatch):
     # a small edge set of an admitted id type finishes in one
-    # driver-side union-find: three labelled jobs, one stats record,
-    # no checkpoint and so no single-use warning, a recomputable result
-    import warnings as _warnings
-
+    # driver-side union-find: two labelled jobs, one stats record, no
+    # checkpoint, and a result that rests on no cache
     from spark_extension_spark import connected_components
     from spark_extension_spark.operators import dedup
     from spark_extension_spark.operators.dedup import cc_stats_log
@@ -418,7 +410,7 @@ def test_connected_components_local_path(spark, monkeypatch):
         d for j, d in _job_descriptions(spark).items() if j not in jobs_before
     }
     assert labels == {
-        f"caller - connected_components:{phase}" for phase in ("edges", "local", "result")
+        f"caller - connected_components:{phase}" for phase in ("edges", "local")
     }
     # one hooking round points every node at 1, a second proves it
     assert cc_stats_log(clear=True) == [
@@ -428,12 +420,9 @@ def test_connected_components_local_path(spark, monkeypatch):
     h(blocking=True)
     assert cached_ids() <= cached_before
 
-    # without a handle: no warning, and the result survives the loss of
-    # its cache, since it rests on no freed checkpoint
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        out = connected_components(chain)
-    assert not [x for x in w if "single-use" in str(x.message)]
+    # without a handle the result is recomputable: it rests on no
+    # checkpoint and no cache
+    out = connected_components(chain)
     want = sorted(map(tuple, out.collect()))
     out.unpersist(True)
     assert sorted(map(tuple, out.collect())) == want
@@ -442,7 +431,7 @@ def test_connected_components_local_path(spark, monkeypatch):
     # the loop's limits do not apply: a 40-node path converges on the
     # driver where two label steps could not
     path = spark.createDataFrame([(i, i + 1) for i in range(1, 40)], ["id_a", "id_b"])
-    got = connected_components(path, max_iterations=2, check_every=1, warn_single_use=False)
+    got = connected_components(path, max_iterations=2, check_every=1)
     assert {r["cluster_id"] for r in got.collect()} == {1}
     assert cc_stats_log(clear=True)[0]["algorithm"] == "local"
 
@@ -450,19 +439,19 @@ def test_connected_components_local_path(spark, monkeypatch):
     # width limit, so the row bound does not bound the bytes collected):
     # the loop runs
     doubles = spark.createDataFrame([(2.0, 1.5), (3.0, 2.0)], ["id_a", "id_b"])
-    got = connected_components(doubles, warn_single_use=False)
+    got = connected_components(doubles)
     assert {r["id"]: r["cluster_id"] for r in got.collect()} == {1.5: 1.5, 2.0: 1.5, 3.0: 1.5}
     strings = spark.createDataFrame([("b", "a"), ("c", "b")], ["id_a", "id_b"])
-    got = connected_components(strings, warn_single_use=False)
+    got = connected_components(strings)
     assert {r["id"]: r["cluster_id"] for r in got.collect()} == {"a": "a", "b": "a", "c": "a"}
     assert [e["algorithm"] for e in cc_stats_log(clear=True)] == ["label", "label"]
 
     # the declared schema (types and nullability) is the loop's
     for schema in ("id_a long, id_b long", "id_a int, id_b int", "id_a date, id_b date"):
         edges = spark.createDataFrame([], schema)
-        local = connected_components(edges, warn_single_use=False).schema
+        local = connected_components(edges).schema
         monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", -1)
-        assert connected_components(edges, warn_single_use=False).schema == local, schema
+        assert connected_components(edges).schema == local, schema
         monkeypatch.undo()
     cc_stats_log(clear=True)
 
@@ -482,7 +471,7 @@ def test_connected_components_validates_before_spark_work(spark, kw, match):
     edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
     before = set(_job_descriptions(spark))
     with pytest.raises(ValueError, match=match):
-        connected_components(edges, warn_single_use=False, **kw)
+        connected_components(edges, **kw)
     assert set(_job_descriptions(spark)) == before
 
 
@@ -506,9 +495,7 @@ def test_connected_components_batch_plan_linear(spark, monkeypatch, cc_loop, che
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(11)], ["id_a", "id_b"]
     )
-    out = dedup.connected_components(
-        edges, check_every=check_every, warn_single_use=False
-    )
+    out = dedup.connected_components(edges, check_every=check_every)
     assert {r["cluster_id"] for r in out.collect()} == {0}
     assert refs == [check_every] * -(-12 // check_every)
 
@@ -525,23 +512,23 @@ def test_connected_components_job_labels(spark, cc_loop):
         [(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"]
     )
     with job_description("caller"):
-        connected_components(edges, check_every=2, warn_single_use=False)
+        connected_components(edges, check_every=2)
     labels = {
         d for j, d in _job_descriptions(spark).items() if j not in before
     }
     assert labels == {
         f"caller - connected_components:{phase}"
-        for phase in ("edges", "batch1", "batch2", "batch3", "result")
+        for phase in ("edges", "batch1", "batch2", "batch3")
     }
 
     # the star algorithm names its orientation job star0, then one
-    # label per contraction round
+    # label per contraction round, and checkpoints its labels as result
     from spark_extension_spark import cc_stats_log
 
     cc_stats_log(clear=True)
     before = set(_job_descriptions(spark))
     with job_description("caller"):
-        connected_components(edges, algorithm="star", warn_single_use=False)
+        connected_components(edges, algorithm="star")
     (stats,) = cc_stats_log(clear=True)
     rounds = stats["iterations"]
     assert rounds >= 2
@@ -563,16 +550,9 @@ def test_connected_components_unpersist_handle(spark):
     handle = UnpersistHandle()
     out = connected_components(edges, unpersist_handle=handle)
     assert out.count() == 2
-    handle()  # releases the persisted labels without error
-
-
-def test_connected_components_bad_algorithm(spark):
-    import pytest
-    from spark_extension_spark import connected_components
-
-    edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    with pytest.raises(ValueError, match="unknown algorithm"):
-        connected_components(edges, algorithm="magic")
+    # the driver-side path checkpoints nothing, but the handle still
+    # holds the release callback and fires without error
+    handle()
 
 
 def test_near_dup_clusters_representative(spark):
@@ -580,7 +560,7 @@ def test_near_dup_clusters_representative(spark):
     from pyspark.sql import functions as F
 
     pairs = spark.createDataFrame([(7, 3), (3, 9), (20, 21)], ["id_a", "id_b"])
-    clusters = near_dup_clusters(pairs, warn_single_use=False)
+    clusters = near_dup_clusters(pairs)
     reps = clusters.where(F.col("doc_id") == F.col("cluster_id"))
     assert {r["doc_id"] for r in reps.collect()} == {3, 20}
     drop = clusters.where(F.col("doc_id") != F.col("cluster_id"))
@@ -759,7 +739,7 @@ def test_dedup_keep_best(spark):
     )
     pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
     out = {r["doc_id"]: r for r in
-           dedup_keep_best(df, "quality", pairs=pairs, warn_single_use=False).collect()}
+           dedup_keep_best(df, "quality", pairs=pairs).collect()}
     # quality tie between 2 and 3 -> smallest id (2) wins; singleton kept
     assert set(out) == {2, 4}
     assert out[2]["cluster_id"] == 1 and out[2]["cluster_size"] == 3
@@ -768,7 +748,8 @@ def test_dedup_keep_best(spark):
 
 def test_keep_best_and_splits_unpersist_handle(spark, docs):
     # one plain handle threaded through the COMPOSED pipelines must
-    # collect every internal cache (shingles, CC labels, labeled corpus)
+    # collect every internal cache (shingles, labeled corpus, and CC's
+    # release callback)
     # without tripping set_dataframe's single-shot guard, and a single
     # call must return storage to baseline
     from spark_extension_spark.operators.dedup import (
@@ -804,7 +785,7 @@ def test_dedup_keep_best_self_computed_pairs(spark, docs):
 
     scored = docs.withColumn("quality", F.length("text").cast("double"))
     kept = {r["doc_id"] for r in
-            dedup_keep_best(scored, "quality", threshold=0.5, warn_single_use=False).collect()}
+            dedup_keep_best(scored, "quality", threshold=0.5).collect()}
     # docs 1,2,3 are near-dups (cluster of 3): longest (2: BASE + '.')
     # survives -- 1 and 3 tie on content length but 2 has the extra dot
     assert 4 in kept and 5 in kept
@@ -825,21 +806,17 @@ def test_precomputed_clusters_shared_across_consumers(spark, docs, cc_loop):
     )
 
     scored = docs.withColumn("quality", F.length("text").cast("double"))
-    own_kept = dedup_keep_best(
-        scored, "quality", threshold=0.5, warn_single_use=False
-    ).collect()
+    own_kept = dedup_keep_best(scored, "quality", threshold=0.5).collect()
     own_splits = leakage_safe_splits(
-        docs, {"train": 0.8, "test": 0.2}, threshold=0.5, warn_single_use=False
+        docs, {"train": 0.8, "test": 0.2}, threshold=0.5
     ).collect()
 
     cc_stats_log(clear=True)
     pairs = ngram_jaccard_pairs(docs, threshold=0.5).select("id_a", "id_b")
-    shared = near_dup_clusters(pairs, warn_single_use=False)
-    kept = dedup_keep_best(
-        scored, "quality", clusters=shared, warn_single_use=False
-    ).collect()
+    shared = near_dup_clusters(pairs)
+    kept = dedup_keep_best(scored, "quality", clusters=shared).collect()
     splits = leakage_safe_splits(
-        docs, {"train": 0.8, "test": 0.2}, clusters=shared, warn_single_use=False
+        docs, {"train": 0.8, "test": 0.2}, clusters=shared
     ).collect()
     assert len(cc_stats_log()) == 1  # one propagation loop fed both
 
@@ -1298,8 +1275,7 @@ class TestLabelPropagation:
         edges = spark.createDataFrame(c1 + c2 + [(4, 10)], ["src", "dst"])
 
         cc = connected_components(
-            edges.withColumnRenamed("src", "id_a").withColumnRenamed("dst", "id_b"),
-            warn_single_use=False,
+            edges.withColumnRenamed("src", "id_a").withColumnRenamed("dst", "id_b")
         )
         assert cc.select("cluster_id").distinct().count() == 1
 
@@ -1343,10 +1319,10 @@ class TestLabelPropagation:
 
 @pytest.mark.usefixtures("cc_loop")
 class TestCheckpointLifecycle:
-    # round-6 contract: the FINAL checkpoint generation's lifetime
-    # follows the unpersist handle — kept (result recomputable) until
-    # the handle fires, freed immediately without one (no per-call
-    # storage accumulation), freed with everything else on failure
+    # the graph loops' contract: the FINAL checkpoint generation backs
+    # the result and stays live (result recomputable) until the handle
+    # fires or, without one, the ContextCleaner collects it; superseded
+    # generations never accumulate, and a failure frees everything
 
     def _cached_ids(self, spark):
         return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
@@ -1370,23 +1346,41 @@ class TestCheckpointLifecycle:
         h(blocking=True)
 
     def test_no_handle_calls_do_not_accumulate_storage(self, spark):
-        # the final generation is freed immediately without a handle:
-        # repeated calls must not grow cached-RDD count beyond the
-        # persisted results themselves (regression pin for a measured
-        # session-wide storage-pressure effect across a 149-query bench)
+        # without a handle each live result keeps exactly its final
+        # checkpoint generation: superseded generations and the edge
+        # cache are freed inside the call, so repeated calls grow the
+        # cached-RDD count by at most one per result still referenced
         from spark_extension_spark.operators.dedup import near_dup_clusters
 
         pairs = spark.createDataFrame([(1, 2), (3, 4)], ["id_a", "id_b"])
         before = len(self._cached_ids(spark))
         outs = []
         for _ in range(3):
-            out = near_dup_clusters(pairs, warn_single_use=False)
+            out = near_dup_clusters(pairs)
             out.count()
             outs.append(out)
         grown = len(self._cached_ids(spark)) - before
-        assert grown <= 3  # one persisted result per call, nothing else
-        for out in outs:
-            out.unpersist(True)
+        assert grown <= 3  # one final generation per call, nothing else
+
+    @pytest.mark.parametrize("algorithm", ["label", "star"])
+    def test_no_handle_result_survives_cache_loss(self, spark, algorithm):
+        # without a handle the result still rests on a live checkpoint,
+        # so dropping whatever cache it has and re-running gives the same
+        # rows, and no warning is given
+        import warnings as _warnings
+
+        from spark_extension_spark.operators.dedup import connected_components
+
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (5, 6)], ["id_a", "id_b"]
+        )
+        with _warnings.catch_warnings():
+            _warnings.simplefilter("error", UserWarning)
+            out = connected_components(edges, algorithm=algorithm)
+        want = sorted(map(tuple, out.collect()))
+        out.unpersist(True)
+        assert sorted(map(tuple, out.collect())) == want
+        assert want == [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)]
 
     def test_failure_path_frees_all_generations(self, spark):
         from spark_extension_spark.operators.dedup import connected_components
@@ -1418,44 +1412,6 @@ class TestCheckpointLifecycle:
         assert self._cached_ids(spark) <= before
         with pytest.raises(RuntimeError, match="set first"):
             UnpersistHandle()()
-
-
-def test_connected_components_single_use_warning_controls(spark, cc_loop):
-    import warnings as _warnings
-
-    from spark_extension_spark import connected_components
-    from spark_extension_spark.utils import UnpersistHandle
-
-    edges = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    # no handle -> one discoverable warning
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        connected_components(edges).collect()
-    assert any("single-use" in str(x.message) for x in w)
-    # opt-out accepts the contract silently
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        connected_components(edges, warn_single_use=False).collect()
-    assert not [x for x in w if "single-use" in str(x.message)]
-    # a handle makes the result durable -> no warning either
-    h = UnpersistHandle()
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        connected_components(edges, unpersist_handle=h).collect()
-    assert not [x for x in w if "single-use" in str(x.message)]
-    h()
-
-
-def test_composed_dedup_ops_forward_warn_flag(spark, cc_loop):
-    import warnings as _warnings
-
-    from spark_extension_spark.operators.dedup import near_dup_clusters
-
-    pairs = spark.createDataFrame([(1, 2)], ["id_a", "id_b"])
-    with _warnings.catch_warnings(record=True) as w:
-        _warnings.simplefilter("always")
-        near_dup_clusters(pairs, warn_single_use=False).collect()
-    assert not [x for x in w if "single-use" in str(x.message)]
 
 
 def test_exact_dedup_null_text_keeps_one_representative(spark):

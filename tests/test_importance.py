@@ -116,7 +116,6 @@ def test_leakage_safe_splits_cluster_integrity(spark):
     df = spark.createDataFrame(base + dups, ["doc_id", "text"])
     out = leakage_safe_splits(
         df, {"train": 0.7, "val": 0.15, "test": 0.15}, n=3, threshold=0.5,
-        warn_single_use=False,
     )
     rows = out.select("doc_id", "cluster_id", "split").collect()
     by_cluster = {}

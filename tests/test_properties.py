@@ -321,9 +321,7 @@ def test_connected_components_matches_union_find(spark, edges):
             for algorithm in ("label", "star"):
                 got = {
                     r["id"]: r["cluster_id"]
-                    for r in connected_components(
-                        df, algorithm=algorithm, warn_single_use=False
-                    ).collect()
+                    for r in connected_components(df, algorithm=algorithm).collect()
                 }
                 assert got == want, f"{algorithm}, bound {bound}: {got} != {want}"
 

@@ -152,7 +152,7 @@ def test_semantic_dedup_clusters_and_keeps(spark):
         (5, [0.577, 0.577, 0.577]),
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"]: r for r in semantic_dedup(df, threshold=0.99, n_cells=2, warn_single_use=False).collect()}
+    got = {r["vec_id"]: r for r in semantic_dedup(df, threshold=0.99, n_cells=2).collect()}
     assert got[3]["cluster_id"] == 1 and not got[3]["keep"]
     assert got[4]["cluster_id"] == 2 and not got[4]["keep"]
     assert got[1]["keep"] and got[2]["keep"] and got[5]["keep"]
@@ -170,7 +170,7 @@ def test_semantic_dedup_transitive_chain(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {r["vec_id"]: r["cluster_id"] for r in
-           semantic_dedup(df, threshold=0.995, n_cells=1, warn_single_use=False).collect()}
+           semantic_dedup(df, threshold=0.995, n_cells=1).collect()}
     assert got == {10: 10, 11: 10, 12: 10}
 
 
@@ -207,7 +207,7 @@ def test_semantic_dedup_derives_cells_when_unpinned(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     # n_cells=None: derived from one count job (ceil(4/4096) = 1 cell)
-    got = {r["vec_id"]: r for r in semantic_dedup(df, threshold=0.99, warn_single_use=False).collect()}
+    got = {r["vec_id"]: r for r in semantic_dedup(df, threshold=0.99).collect()}
     assert got[3]["cluster_id"] == 1 and not got[3]["keep"]
     assert got[4]["cluster_id"] == 2 and not got[4]["keep"]
 
