@@ -892,7 +892,12 @@ def connected_components(
     ``:local``).  Everything below about batches, checkpoints and
     ``max_iterations``/``check_every`` applies to the distributed loop
     that larger edge sets and other id types run; the driver-side path
-    always converges.
+    always converges.  Its result is a ``createDataFrame`` frame, and
+    every action on it decodes that table again: one ``count()`` took
+    0.69 / 1.20 / 2.36 s at 1M / 2M / 4M symmetric rows (5-cliques,
+    ``local[4]``), against ~0.1 s on a loop result reading its
+    checkpoint.  A consumer that runs several actions on a large result
+    should persist it.
 
     ``algorithm='label'`` (default): min-label propagation — each step
     is one equi-join + one min-aggregate keyed by node id; steps needed

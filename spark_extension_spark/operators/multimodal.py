@@ -5,15 +5,16 @@ Design: a multimodal dataset is just a DataFrame with a ``binary``
 column and a ``map<string,string>`` metadata column — partitioning,
 predicate pushdown on metadata, and columnar storage all come for free
 from parquet + Catalyst.  Heavy per-blob work (decode, resize, feature
-extraction) runs in Arrow-batched ``mapInPandas`` so bytes cross the
-JVM/Python boundary once per batch, not per row.
+extraction) runs in Arrow-batched ``mapInArrow`` (through
+:func:`~..utils.map_rows`) so bytes cross the JVM/Python boundary once
+per batch, not per row.
 
 Codec policy: blobs in the deterministic ``FAKE`` container format
 (see :func:`make_fake_image_blob`) always decode — they are the
 reproducible oracle path every gate query and test uses.  For real
 containers the kernels probe for an optional codec library **inside
 the worker-side kernel** (PIL for images, soundfile for audio —
-:func:`_optional_pil` / :func:`_optional_soundfile`): if present, real
+:func:`_image` / :func:`_optional_soundfile`): if present, real
 bytes decode through it; if absent (as in this build's sandbox, which
 has neither), real bytes raise ``NotImplementedError`` exactly as
 before.  Video frame extraction stays stub-only (a real path needs
@@ -24,12 +25,12 @@ behavior — is identical on both paths.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import io
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..utils import map_rows
 
 __all__ = [
     "make_fake_image_blob",
@@ -63,6 +64,24 @@ def _optional_pil():
         return Image
     except ImportError:
         return None
+
+
+def _image(data: bytes, fake, real):
+    """``fake(width, height, payload)`` for a blob in the FAKE container,
+    else ``real(im)`` on the blob opened by PIL — which must be
+    importable on the worker, or the blob raises
+    ``NotImplementedError``."""
+    if data.startswith(b"IMG1|"):
+        _, w, h, payload = data.split(b"|", 3)
+        return fake(int(w), int(h), payload)
+    pil = _optional_pil()
+    if pil is None:
+        raise NotImplementedError(
+            "real image decoding requires PIL/libvips; only the "
+            "deterministic FAKE container is supported in this build"
+        )
+    with pil.open(io.BytesIO(data)) as im:
+        return real(im)
 
 
 def _optional_soundfile():
@@ -109,46 +128,24 @@ def decode_images(
 ) -> DataFrame:
     """Decode image blobs to (id, width, height, payload_bytes).
 
-    Arrow-batched ``mapInPandas``: the kernel sees pandas batches of raw
-    bytes.  The ``FAKE`` container always decodes (deterministic oracle
-    path); real formats decode through PIL when it is importable on the
-    workers (``payload_bytes`` = container size), else raise
+    Arrow-batched ``mapInArrow``: the kernel sees the raw bytes.  The
+    ``FAKE`` container always decodes (deterministic oracle path); real
+    formats decode through PIL when it is importable on the workers
+    (``payload_bytes`` = container size), else raise
     ``NotImplementedError``.
     """
-    id_name, blob_name = id_col, blob_col
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def rows(doc_id, data):
+        yield (doc_id, *_image(
+            data,
+            lambda w, h, payload: (w, h, len(payload)),
+            lambda im: (im.width, im.height, len(data)),
+        ))
 
-        pil = _optional_pil()
-        for pdf in batches:
-            ids, widths, heights, sizes = [], [], [], []
-            for doc_id, raw in zip(pdf[id_name], pdf[blob_name]):
-                data = bytes(raw)
-                if not data.startswith(b"IMG1|"):
-                    if pil is None:
-                        raise NotImplementedError(
-                            "real image decoding requires PIL/libvips; only the "
-                            "deterministic FAKE container is supported in this build"
-                        )
-                    with pil.open(io.BytesIO(data)) as im:
-                        ids.append(doc_id)
-                        widths.append(im.width)
-                        heights.append(im.height)
-                        sizes.append(len(data))
-                    continue
-                _, w, h, payload = data.split(b"|", 3)
-                ids.append(doc_id)
-                widths.append(int(w))
-                heights.append(int(h))
-                sizes.append(len(payload))
-            yield pd.DataFrame(
-                {id_name: ids, "width": widths, "height": heights,
-                 "payload_bytes": sizes}
-            )
-
-    return df.select(id_name, blob_name).mapInPandas(
-        kernel, f"{id_name} long, width int, height int, payload_bytes long"
+    return map_rows(
+        df.select(id_col, blob_col),
+        f"{id_col} long, width int, height int, payload_bytes long",
+        rows,
     )
 
 
@@ -173,7 +170,7 @@ def resize_images(
 ) -> DataFrame:
     """Fit-within resize of image blobs: scale to the largest size that
     fits ``target_w × target_h`` preserving aspect ratio (never
-    upscales).  Arrow-batched ``mapInPandas`` — the exact slot a
+    upscales).  Arrow-batched ``mapInArrow`` — the exact slot a
     PIL/libvips ``thumbnail`` call occupies in production.
 
     The deterministic ``FAKE`` container resizes by exact integer
@@ -185,64 +182,35 @@ def resize_images(
     resized blob (chainable into :func:`decode_images`) plus the old
     and new dimensions.
     """
-    id_name, blob_name = id_col, blob_col
     tw, th = int(target_w), int(target_h)
     if tw < 1 or th < 1:
         raise ValueError(f"target size must be positive, got {tw}x{th}")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def fake(w, h, payload):
+        # degenerate 0-dimension blobs (nothing validates dims at
+        # creation) clamp to 1px instead of crashing the whole task on a
+        # ZeroDivisionError
+        scale = min(tw / max(w, 1), th / max(h, 1), 1.0)
+        ow = max(1, int(w * scale))
+        oh = max(1, int(h * scale))
+        keep = max(1, (len(payload) * ow * oh) // max(w * h, 1)) if payload else 0
+        return w, h, ow, oh, f"IMG1|{ow}|{oh}|".encode() + payload[:keep]
 
-        pil = _optional_pil()
-        for pdf in batches:
-            ids, ws, hs, ows, ohs, blobs = [], [], [], [], [], []
-            for doc_id, raw in zip(pdf[id_name], pdf[blob_name]):
-                data = bytes(raw)
-                if not data.startswith(b"IMG1|"):
-                    if pil is None:
-                        raise NotImplementedError(
-                            "real image resizing requires PIL/libvips; only the "
-                            "deterministic FAKE container is supported in this build"
-                        )
-                    with pil.open(io.BytesIO(data)) as im:
-                        w, h = im.width, im.height
-                        fmt = im.format or "PNG"
-                        im2 = im.copy()
-                        im2.thumbnail((tw, th))
-                        buf = io.BytesIO()
-                        im2.save(buf, format=fmt)
-                        ids.append(doc_id)
-                        ws.append(w); hs.append(h)
-                        ows.append(im2.width); ohs.append(im2.height)
-                        blobs.append(buf.getvalue())
-                    continue
-                _, w, h, payload = data.split(b"|", 3)
-                w, h = int(w), int(h)
-                # degenerate 0-dimension blobs (nothing validates dims
-                # at creation) clamp to 1px instead of crashing the
-                # whole task on a ZeroDivisionError
-                scale = min(tw / max(w, 1), th / max(h, 1), 1.0)
-                ow = max(1, int(w * scale))
-                oh = max(1, int(h * scale))
-                keep = (
-                    max(1, (len(payload) * ow * oh) // max(w * h, 1))
-                    if payload
-                    else 0
-                )
-                out_payload = payload[:keep]
-                header = f"IMG1|{ow}|{oh}|".encode()
-                ids.append(doc_id)
-                ws.append(w); hs.append(h); ows.append(ow); ohs.append(oh)
-                blobs.append(header + out_payload)
-            yield pd.DataFrame(
-                {id_name: ids, "width": ws, "height": hs,
-                 "out_width": ows, "out_height": ohs, blob_name: blobs}
-            )
+    def real(im):
+        small = im.copy()
+        small.thumbnail((tw, th))
+        buf = io.BytesIO()
+        small.save(buf, format=im.format or "PNG")
+        return im.width, im.height, small.width, small.height, buf.getvalue()
 
-    return df.select(id_name, blob_name).mapInPandas(
-        kernel,
-        f"{id_name} long, width int, height int, out_width int, out_height int, "
-        f"{blob_name} binary",
+    def rows(doc_id, data):
+        yield (doc_id, *_image(data, fake, real))
+
+    return map_rows(
+        df.select(id_col, blob_col),
+        f"{id_col} long, width int, height int, out_width int, out_height int, "
+        f"{blob_col} binary",
+        rows,
     )
 
 
@@ -266,7 +234,7 @@ def sample_frames(
     """Extract sampled frames from video blobs: one OUTPUT ROW PER
     FRAME (every ``every``-th, capped at ``max_frames``) — the
     fan-out shape a real ffmpeg frame extractor produces, exercising
-    the 1→N ``mapInPandas`` plumbing downstream vision models consume.
+    the 1→N ``mapInArrow`` plumbing downstream vision models consume.
 
     Frame ``i``'s bytes are the payload slice
     ``[i·frame_bytes, (i+1)·frame_bytes)`` (short reads at the tail
@@ -275,41 +243,27 @@ def sample_frames(
 
     Returns ``(id, n_frames, frame_index, frame_size, frame)``.
     """
-    id_name, blob_name = id_col, blob_col
     ev, mx = int(every), int(max_frames)
     if ev < 1 or mx < 1:
         raise ValueError(f"every/max_frames must be positive, got {ev}/{mx}")
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ns, idxs, sizes, frames = [], [], [], [], []
-            for doc_id, raw in zip(pdf[id_name], pdf[blob_name]):
-                data = bytes(raw)
-                if not data.startswith(b"VID1|"):
-                    raise NotImplementedError(
-                        "real video decoding requires ffmpeg; only the "
-                        "deterministic FAKE container is supported in this build"
-                    )
-                _, n, fb, payload = data.split(b"|", 3)
-                n, fb = int(n), int(fb)
-                if n <= 0:
-                    continue
-                last = min(n - 1, (mx - 1) * ev)
-                for i in range(0, last + 1, ev):
-                    chunk = payload[i * fb:(i + 1) * fb]
-                    ids.append(doc_id)
-                    ns.append(n)
-                    idxs.append(i)
-                    sizes.append(len(chunk))
-                    frames.append(chunk)
-            yield pd.DataFrame(
-                {id_name: ids, "n_frames": ns, "frame_index": idxs,
-                 "frame_size": sizes, "frame": frames}
+    def rows(doc_id, data):
+        if not data.startswith(b"VID1|"):
+            raise NotImplementedError(
+                "real video decoding requires ffmpeg; only the "
+                "deterministic FAKE container is supported in this build"
             )
+        _, n, fb, payload = data.split(b"|", 3)
+        n, fb = int(n), int(fb)
+        # n <= 0 leaves the range empty: no frames, no rows
+        for i in range(0, min(n - 1, (mx - 1) * ev) + 1, ev):
+            chunk = payload[i * fb:(i + 1) * fb]
+            yield doc_id, n, i, len(chunk), chunk
 
-    return df.select(id_name, blob_name).mapInPandas(
-        kernel,
-        f"{id_name} long, n_frames int, frame_index int, frame_size int, frame binary",
+    return map_rows(
+        df.select(id_col, blob_col),
+        f"{id_col} long, n_frames int, frame_index int, frame_size int, frame binary",
+        rows,
     )
 
 
@@ -328,7 +282,7 @@ def image_ahash(
     runs, partitionings, and engines — no float means.  Band ``j``
     packs bits ``8j..8j+7`` big-endian into 0..255.
 
-    Arrow-batched ``mapInPandas`` with a vectorized numpy kernel.  The
+    Arrow-batched ``mapInArrow`` with a vectorized numpy kernel.  The
     deterministic ``FAKE`` container hashes its payload bytes (the
     oracle path); real formats hash classical aHash pixels — PIL
     grayscale, LANCZOS resize to 8×8, same integer threshold — when
@@ -338,49 +292,28 @@ def image_ahash(
     """
     import numpy as np
 
-    id_name, blob_name = id_col, blob_col
     _weights = 1 << (7 - np.arange(8, dtype=np.int64))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def pixels(im):
+        from PIL import Image
 
-        pil = _optional_pil()
-        for pdf in batches:
-            ids, bands_out = [], []
-            for doc_id, raw in zip(pdf[id_name], pdf[blob_name]):
-                data = bytes(raw)
-                if not data.startswith(b"IMG1|"):
-                    if pil is None:
-                        raise NotImplementedError(
-                            "real image decoding requires PIL/libvips; only the "
-                            "deterministic FAKE container is supported in this build"
-                        )
-                    with pil.open(io.BytesIO(data)) as im:
-                        px = im.convert("L").resize((8, 8), pil.LANCZOS)
-                        payload = bytes(px.tobytes())
-                else:
-                    _, _w, _h, payload = data.split(b"|", 3)
-                arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                L = int(arr.size)
-                if L == 0:
-                    bands = [0] * 8
-                else:
-                    cell = (np.arange(L, dtype=np.int64) * 64) // L
-                    s = np.zeros(64, dtype=np.int64)
-                    np.add.at(s, cell, arr)
-                    w = np.bincount(cell, minlength=64)
-                    bits = (s * L > int(arr.sum()) * w).astype(np.int64)
-                    bands = [
-                        int((bits[8 * j : 8 * j + 8] * _weights).sum())
-                        for j in range(8)
-                    ]
-                ids.append(doc_id)
-                bands_out.append(bands)
-            yield pd.DataFrame({id_name: ids, "bands": bands_out})
+        return im.convert("L").resize((8, 8), Image.LANCZOS).tobytes()
 
-    return df.select(id_name, blob_name).mapInPandas(
-        kernel, f"{id_name} long, bands array<int>"
-    )
+    def rows(doc_id, data):
+        payload = _image(data, lambda w, h, payload: payload, pixels)
+        arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+        L = int(arr.size)
+        if L == 0:
+            yield doc_id, [0] * 8
+            return
+        cell = (np.arange(L, dtype=np.int64) * 64) // L
+        s = np.zeros(64, dtype=np.int64)
+        np.add.at(s, cell, arr)
+        w = np.bincount(cell, minlength=64)
+        bits = (s * L > int(arr.sum()) * w).astype(np.int64)
+        yield doc_id, [int((bits[8 * j : 8 * j + 8] * _weights).sum()) for j in range(8)]
+
+    return map_rows(df.select(id_col, blob_col), f"{id_col} long, bands array<int>", rows)
 
 
 def ahash_near_dup_pairs(
@@ -480,7 +413,7 @@ def audio_stats(
     - ``energy``    = Σ s_i² over the 8-bit sample values (int64)
     - ``peak``      = max sample value (0 for empty clips)
 
-    Arrow-batched ``mapInPandas`` numpy kernel.  The deterministic
+    Arrow-batched ``mapInArrow`` numpy kernel.  The deterministic
     ``FAKE`` container (8-bit samples) always decodes — the oracle
     path.  Real containers (WAV/FLAC/OGG) decode through soundfile as
     int16 samples (energy/peak over the int16 magnitudes, still exact
@@ -490,45 +423,29 @@ def audio_stats(
     """
     import numpy as np
 
-    id_name, blob_name = id_col, blob_col
+    def rows(doc_id, data):
+        if data.startswith(b"AUD1|"):
+            _, rate, payload = data.split(b"|", 2)
+            arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+        else:
+            sf_mod = _optional_soundfile()
+            if sf_mod is None:
+                raise NotImplementedError(
+                    "real audio decoding requires ffmpeg/soundfile; "
+                    "only the deterministic FAKE container is "
+                    "supported in this build"
+                )
+            samples, rate = sf_mod.read(io.BytesIO(data), dtype="int16")
+            arr = np.abs(np.asarray(samples, dtype=np.int64).reshape(-1))
+        rate, n = int(rate), int(arr.size)
+        yield (
+            doc_id, rate, n, n * 1000 // rate if rate > 0 else 0,
+            int((arr * arr).sum()), int(arr.max()) if n else 0,
+        )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        sf_mod = _optional_soundfile()
-        for pdf in batches:
-            ids, rates, ns, durs, energies, peaks = [], [], [], [], [], []
-            for doc_id, raw in zip(pdf[id_name], pdf[blob_name]):
-                data = bytes(raw)
-                if not data.startswith(b"AUD1|"):
-                    if sf_mod is None:
-                        raise NotImplementedError(
-                            "real audio decoding requires ffmpeg/soundfile; "
-                            "only the deterministic FAKE container is "
-                            "supported in this build"
-                        )
-                    samples, rate = sf_mod.read(io.BytesIO(data), dtype="int16")
-                    arr = np.abs(
-                        np.asarray(samples, dtype=np.int64).reshape(-1)
-                    )
-                    rate = int(rate)
-                else:
-                    _, rate, payload = data.split(b"|", 2)
-                    rate = int(rate)
-                    arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
-                ids.append(doc_id)
-                rates.append(rate)
-                ns.append(int(arr.size))
-                durs.append(int(arr.size) * 1000 // rate if rate > 0 else 0)
-                energies.append(int((arr * arr).sum()))
-                peaks.append(int(arr.max()) if arr.size else 0)
-            yield pd.DataFrame(
-                {id_name: ids, "sample_rate": rates, "n_samples": ns,
-                 "duration_ms": durs, "energy": energies, "peak": peaks}
-            )
-
-    return df.select(id_name, blob_name).mapInPandas(
-        kernel,
-        f"{id_name} long, sample_rate int, n_samples long, duration_ms long,"
+    return map_rows(
+        df.select(id_col, blob_col),
+        f"{id_col} long, sample_rate int, n_samples long, duration_ms long,"
         " energy long, peak int",
+        rows,
     )

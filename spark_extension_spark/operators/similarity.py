@@ -20,13 +20,17 @@ Three strategies:
   nearest coarse centroid; queries probe their ``n_probes`` nearest
   cells and score only vectors inside them.
 
-All exact scoring runs in Arrow-batched numpy kernels: Spark evaluates
-higher-order array lambdas (``aggregate``/``zip_with``) *interpreted*,
-outside whole-stage codegen, so a column-algebra cosine costs ~dim
-interpreted evals per row while the numpy path is one vectorized
-``einsum``/matmul per batch (measured ~4× end-to-end on the sf0.1
-gate queries).  The column formulation is kept as
-:func:`cosine_similarity` for composition into pure-SQL plans.
+All exact scoring runs in numpy kernels over Arrow batches
+(``mapInArrow``): Spark evaluates higher-order array lambdas
+(``aggregate``/``zip_with``) *interpreted*, outside whole-stage codegen,
+so a column-algebra cosine costs ~dim interpreted evals per row while
+the numpy path is one vectorized ``einsum``/matmul per batch (measured
+~4× end-to-end on the sf0.1 gate queries).  Every kernel reads its
+vector column through :func:`_vectors` (one reshape of the flattened
+Arrow list, no per-row conversion) and builds its outputs as Arrow
+arrays, nulls included, with no pandas frame in between.  The column
+formulation is kept as :func:`cosine_similarity` for composition into
+pure-SQL plans.
 
 At 100 TB the brute-force variant is a single scan with no shuffle of
 the corpus at all; the LSH variant shuffles only (bucket, vector) pairs
@@ -65,6 +69,40 @@ __all__ = [
     "semantic_decontam_flags",
     "semantic_decontaminate",
 ]
+
+
+def _vectors(col):
+    """``(matrix, valid)`` for an ``array<float|double>`` Arrow column:
+    the float64 matrix of its non-null rows and the row validity mask.
+
+    A null element reads as NaN, which each kernel's arithmetic carries
+    to a null or dropped result.  The rows of one batch must share a
+    length: reshaping ragged rows would misalign every later row, so
+    they raise instead."""
+    import numpy as np
+
+    lengths = col.value_lengths().drop_null().to_numpy()
+    dim = int(lengths[0]) if len(lengths) else 0
+    if (lengths != dim).any():
+        raise ValueError(
+            f"vectors in one batch have inconsistent dimensions "
+            f"{sorted(set(lengths.tolist()))}; embeddings must share one dim"
+        )
+    flat = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(lengths), dim), col.is_valid().to_numpy(zero_copy_only=False)
+
+
+def _fold_sq_norms(M):
+    """Row norms as a left-to-right fold of the squares (NOT
+    ``np.linalg.norm``, whose pairwise summation a SQL ``list_reduce``
+    replay can't reproduce)."""
+    import numpy as np
+
+    sq = M * M
+    acc = sq[:, 0].copy()
+    for j in range(1, M.shape[1]):
+        acc = acc + sq[:, j]
+    return np.sqrt(acc)
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:
@@ -109,30 +147,25 @@ def cosine_scored_pairs(
     a_name, b_name = a_col, b_col
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            out = pdf[keep].copy()
-            n = len(pdf)
-            if n == 0:
-                out[out_col] = pd.array([], dtype="Float64")
-                yield out
-                continue
-            cos = np.full(n, np.nan, dtype=np.float64)
-            ok = pdf[a_name].notna().to_numpy() & pdf[b_name].notna().to_numpy()
+        for batch in batches:
+            A, a_ok = _vectors(batch.column(a_name))
+            B, b_ok = _vectors(batch.column(b_name))
+            ok = a_ok & b_ok
+            cos = np.full(batch.num_rows, np.nan)
             if ok.any():
-                A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[a_name][ok]])
-                B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[b_name][ok]])
+                A, B = A[ok[a_ok]], B[ok[b_ok]]
                 dot = np.einsum("ij,ij->i", A, B)
                 denom = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
                 with np.errstate(invalid="ignore", divide="ignore"):
                     cos[ok] = np.where(denom > 0, dot / denom, np.nan)
-            vals = pd.array(cos, dtype="Float64")
-            vals[np.isnan(cos)] = pd.NA
-            out[out_col] = vals
-            yield out
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep] + [pa.array(cos, mask=np.isnan(cos))],
+                names=keep + [out_col],
+            )
 
-    return df.mapInPandas(kernel, out_schema)
+    return df.mapInArrow(kernel, out_schema)
 
 
 def brute_force_topk(
@@ -162,9 +195,10 @@ def brute_force_topk(
     result rows rather than a fabricated all-zeros ranking).
     """
     import numpy as np
+    from pyspark.sql.pandas.types import to_arrow_type
 
     # null query vectors can never score: drop them up front (mirrors the
-    # corpus-side notna() handling) instead of crashing np.stack below
+    # corpus-side handling) instead of crashing np.stack below
     qrows = queries.select(id_col, vec_col).where(F.col(vec_col).isNotNull()).collect()
     id_type = corpus.schema[id_col].dataType.simpleString()
     qid_type = queries.schema[id_col].dataType.simpleString()
@@ -195,39 +229,43 @@ def brute_force_topk(
         empty = corpus.sparkSession.createDataFrame([], out_schema)
         return empty.withColumn("rank", F.lit(1).cast("int")).where(F.lit(False))
     Qu = (Q / qnorms[:, None]).T  # (dim, q)
+    qid_arrow = to_arrow_type(queries.schema[id_col].dataType)
     kk, id_name, vec_name, qid_name = k, id_col, vec_col, query_id_col
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            sub = pdf[pdf[vec_name].notna()]
-            if len(sub) == 0:
-                continue
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in sub[vec_name]])
+        for batch in batches:
+            V, ok = _vectors(batch.column(vec_name))
             vnorms = np.linalg.norm(V, axis=1)
             valid = vnorms > 0
             if not valid.any():
                 continue
             V, vnorms = V[valid], vnorms[valid]
-            ids = sub[id_name].to_numpy()[valid]
+            scored_ids = batch.column(id_name).take(np.flatnonzero(ok)[valid])
+            ids = scored_ids.to_numpy(zero_copy_only=False)
             scores = (V / vnorms[:, None]) @ Qu  # (n, q)
             # self-match exclusion: mask to -inf, filtered after selection
             scores = np.where(ids[:, None] == qids[None, :], -np.inf, scores)
-            out_q, out_id, out_cos = [], [], []
+            out_q, out_row = [], []
             for j in range(scores.shape[1]):
                 col = scores[:, j]
                 # exact final ordering (cosine desc, id asc) => lossless truncation
                 top = np.lexsort((ids, -col))[: min(kk, len(col))]
                 top = top[col[top] > -np.inf]
-                out_q.extend([qids[j]] * len(top))
-                out_id.extend(ids[top])
-                out_cos.extend(col[top])
-            yield pd.DataFrame({qid_name: out_q, id_name: out_id, "cosine": out_cos})
+                out_q.append(np.full(len(top), j))
+                out_row.append(top)
+            out_q, out_row = np.concatenate(out_q), np.concatenate(out_row)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(qids[out_q], type=qid_arrow),
+                    scored_ids.take(out_row),
+                    pa.array(scores[out_row, out_q]),
+                ],
+                names=[qid_name, id_name, "cosine"],
+            )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(kernel, out_schema)
+    scored = corpus.select(id_col, vec_col).mapInArrow(kernel, out_schema)
     w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
@@ -301,26 +339,18 @@ def _bucket_column(df: DataFrame, vec_col: str, planes: List[List[int]]) -> Data
     out_schema = f"{fields}, __bucket string"
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.assign(__bucket=pd.Series(dtype="string"))
-                continue
-            out = pdf.copy()
-            buckets = pd.array([None] * len(pdf), dtype="string")
-            ok = pdf[vec_name].notna().to_numpy()
+        for batch in batches:
+            V, ok = _vectors(batch.column(vec_name))
+            buckets = np.full(batch.num_rows, None, dtype=object)
             if ok.any():
-                vectors = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_name][ok]]
-                )
-                signs = (vectors @ plane_matrix) > 0  # (n, p)
-                bits = np.where(signs, "1", "0")
+                bits = np.where((V @ plane_matrix) > 0, "1", "0")  # (n, p)
                 buckets[ok] = ["".join(row) for row in bits]
-            out["__bucket"] = buckets  # null vector -> null bucket (drops in join)
-            yield out
+            # null vector -> null bucket (drops in join)
+            yield batch.append_column("__bucket", pa.array(buckets, pa.string()))
 
-    return df.mapInPandas(kernel, out_schema)
+    return df.mapInArrow(kernel, out_schema)
 
 
 def _with_buckets(
@@ -446,7 +476,7 @@ def rp_lsh_topk(
         )
     planes = rp_planes(num_planes, dim, seed)
 
-    # project BEFORE the Arrow bucket kernel: mapInPandas blocks column
+    # project BEFORE the Arrow bucket kernel: mapInArrow blocks column
     # pruning, so an unprojected corpus would serialize every payload
     # column through Python per batch just to compute __bucket (and a
     # corpus that already carries a query_id-named column would make
@@ -556,40 +586,36 @@ def project_embeddings(
     scale = 1.0 / float(np.sqrt(out_dim))
     vec_name, out_name = vec_col, out_col or vec_col
 
-    fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name != out_name
+    kept = [f for f in df.schema.fields if f.name != out_name]
+    out_schema = ", ".join(
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in kept]
+        + [f"`{out_name}` array<double>"]
     )
-    out_schema = f"{fields}, `{out_name}` array<double>" if fields else f"`{out_name}` array<double>"
+    keep = [f.name for f in kept]
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            out = pdf.drop(columns=[out_name], errors="ignore")
-            if len(pdf) == 0:
-                out[out_name] = pd.Series(dtype="object")
-                yield out
-                continue
-            # null input vectors project to null (row-preserving, like
-            # the quantize transform) instead of crashing np.stack
-            ok = pdf[vec_name].notna().to_numpy()
-            res = [None] * len(pdf)
+        for batch in batches:
+            V, ok = _vectors(batch.column(vec_name))
+            acc = np.zeros((len(V), planes.shape[1]), dtype=np.float64)
             if ok.any():
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_name][ok]]
-                )
-                acc = np.zeros((int(ok.sum()), planes.shape[1]), dtype=np.float64)
                 for d in range(planes.shape[0]):  # fixed-order fold over input dims
                     acc += V[:, d, None] * planes[d]
                 acc *= scale
-                for pos, row in zip(np.flatnonzero(ok), acc):
-                    res[int(pos)] = row
-            out[out_name] = pd.Series(res, index=out.index, dtype="object")
-            yield out
+            # null input vectors project to null (row-preserving, like the
+            # quantize transform); a NaN component becomes a null element
+            offsets = np.concatenate([[0], np.cumsum(ok * planes.shape[1])])
+            projected = pa.ListArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.array(acc.ravel(), from_pandas=True),
+                mask=pa.array(~ok),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep] + [projected], names=keep + [out_name]
+            )
 
-    return df.mapInPandas(kernel, out_schema)
+    return df.mapInArrow(kernel, out_schema)
 
 
 def quantize_embeddings(
@@ -694,29 +720,25 @@ def ivf_assignments(
     out_schema = f"{fields}, __cell int"
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            # NULL embeddings can't stack (0-d arrays) and would crash
-            # the task; drop them like the sibling kernels do
-            if len(pdf):
-                pdf = pdf[pdf[vec_name].notna()].reset_index(drop=True)
-            if len(pdf) == 0:
-                yield pdf.assign(__cell=pd.Series(dtype="int32"))
+        for batch in batches:
+            # NULL embeddings have no cell: drop them like the sibling
+            # kernels do
+            V, ok = _vectors(batch.column(vec_name))
+            if not ok.any():
                 continue
-            vectors = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_name]])
-            vnorms = np.linalg.norm(vectors, axis=1)
+            vnorms = np.linalg.norm(V, axis=1)
             vnorms[vnorms == 0] = 1.0
-            scores = (vectors / vnorms[:, None]) @ cents_unit  # (n, k)
+            scores = (V / vnorms[:, None]) @ cents_unit  # (n, k)
             # probing more cells than exist clamps to k — argsort can't
             # produce more columns, and the repeat must match
             p = min(probes, scores.shape[1])
             top = np.argsort(-scores, axis=1, kind="stable")[:, :p]  # (n, p)
-            repeated = pdf.loc[pdf.index.repeat(p)].reset_index(drop=True)
-            repeated["__cell"] = top.reshape(-1).astype("int32")
-            yield repeated
+            repeated = batch.take(np.repeat(np.flatnonzero(ok), p))
+            yield repeated.append_column("__cell", pa.array(top.reshape(-1).astype("int32")))
 
-    return df.mapInPandas(kernel, out_schema)
+    return df.mapInArrow(kernel, out_schema)
 
 
 def ivf_centroids(
@@ -1181,15 +1203,6 @@ def semantic_decontam_flags(
     """
     import numpy as np
 
-    def _fold_sq_norms(M):
-        # left-to-right fold of the squared norms (NOT np.linalg.norm,
-        # whose pairwise summation the SQL replay can't reproduce)
-        sq = M * M
-        acc = sq[:, 0].copy()
-        for j in range(1, M.shape[1]):
-            acc = acc + sq[:, j]
-        return np.sqrt(acc)
-
     brows = (
         benchmark.select(vec_col).where(F.col(vec_col).isNotNull()).collect()
     )
@@ -1213,23 +1226,13 @@ def semantic_decontam_flags(
     id_name, vec_name = id_col, vec_col
 
     def kernel(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_name]
-            vals = np.full(len(pdf), np.nan)
-            sub = pdf[vec_name].notna()
-            if sub.any():
-                V = np.stack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf.loc[sub, vec_name]]
-                )
-                sq = V * V
-                nacc = sq[:, 0].copy()
-                for j in range(1, V.shape[1]):
-                    nacc = nacc + sq[:, j]
-                norms = np.sqrt(nacc)
+        for batch in batches:
+            V, valid = _vectors(batch.column(vec_name))
+            vals = np.full(batch.num_rows, np.nan)
+            if valid.any():
+                norms = _fold_sq_norms(V)
                 ok = norms > 0
                 if ok.any():
                     Vn = V[ok] / norms[ok, None]
@@ -1248,20 +1251,20 @@ def semantic_decontam_flags(
                     scores = Vn[:, 0:1] * Bu[0:1, :]
                     for j in range(1, Vn.shape[1]):
                         scores = scores + Vn[:, j : j + 1] * Bu[j : j + 1, :]
-                    out = np.full(int(sub.sum()), np.nan)
-                    out[ok] = scores.max(axis=1)
-                    vals[sub.to_numpy()] = out
-            yield pd.DataFrame({id_name: ids, "max_benchmark_cosine": vals})
+                    vals[np.flatnonzero(valid)[ok]] = scores.max(axis=1)
+            # every NaN is masked to NULL, not only unscorable rows (a
+            # NaN component scores NaN): Spark orders NaN above every
+            # number, so NaN >= threshold would be TRUE
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(id_name), pa.array(vals, mask=np.isnan(vals))],
+                names=[id_name, "max_benchmark_cosine"],
+            )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(kernel, out_schema)
-    # kernel marks unscorable rows NaN; map to NULL *before* comparing —
-    # Spark orders NaN above every number, so NaN >= threshold is TRUE
-    mbc = F.when(
-        F.isnan("max_benchmark_cosine"), F.lit(None).cast("double")
-    ).otherwise(F.col("max_benchmark_cosine"))
+    scored = corpus.select(id_col, vec_col).mapInArrow(kernel, out_schema)
+    mbc = F.col("max_benchmark_cosine")
     return scored.select(
         id_col,
-        mbc.alias("max_benchmark_cosine"),
+        mbc,
         F.coalesce(mbc >= F.lit(float(threshold)), F.lit(False)).alias(
             "contaminated"
         ),

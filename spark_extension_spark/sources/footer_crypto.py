@@ -4,7 +4,7 @@ pyarrow (observed with 16.1 and 21.x) aborts the whole process — C++
 ``std::terminate`` on "Cannot decrypt ColumnMetadata", exit status 134,
 not a catchable Python exception — the moment ``md.row_group(g).column(c)``
 is constructed for an *encrypted column chunk* of a plaintext-footer file
-without decryption properties.  Inside ``mapInPandas`` that kills the
+without decryption properties.  Inside ``mapInArrow`` that kills the
 executor worker, so a try/except guard is useless: the five metadata
 sources must know which chunks are encrypted BEFORE touching them.
 

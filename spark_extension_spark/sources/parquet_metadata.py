@@ -3,7 +3,7 @@
 Parity: reference src/main/scala/uk/co/gresearch/spark/parquet/package.scala:32-595.
 The reference fans footer reads out to executors with parquet-hadoop; the
 PySpark-native equivalent distributes the *file list* as a DataFrame and
-reads footers with pyarrow inside ``mapInPandas`` — same I/O profile
+reads footers with pyarrow inside ``mapInArrow`` — same I/O profile
 (one footer read per file, ≤ parallelism tasks, zero row-data I/O),
 no JVM interop.
 
@@ -21,11 +21,11 @@ Output schemas match the reference column-for-column:
 from __future__ import annotations
 
 import os
-from typing import Iterator, List, Optional, Tuple
-
-import pandas as pd
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..utils import map_rows
 
 __all__ = [
     "parquet_metadata",
@@ -61,9 +61,10 @@ def _list_files(paths: Tuple[str, ...]) -> List[Tuple[str, int]]:
 def _files_df(
     spark: SparkSession, paths: Tuple[str, ...], parallelism: Optional[int]
 ) -> DataFrame:
+    """One ``path`` row per file, spread over the footer-reading tasks."""
     files = _list_files(paths)
     n = parallelism or min(len(files), spark.sparkContext.defaultParallelism)
-    df = spark.createDataFrame(files, "path string, size long")
+    df = spark.createDataFrame([(path,) for path, _ in files], "path string")
     return df.repartition(n)
 
 
@@ -125,225 +126,173 @@ def parquet_metadata(
 ) -> DataFrame:
     """One row per parquet file: block/byte/row/value/null totals,
     writer, schema string, encryption state, key-value metadata."""
-    files = _files_df(spark, paths, parallelism)
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                md, crypto = _footer_guarded(path)
-                if crypto.encryption == "UNENCRYPTED":
-                    compressed = _sum_columns(md, "total_compressed_size")
-                    uncompressed = sum(
-                        md.row_group(g).total_byte_size for g in range(md.num_row_groups)
-                    )
-                    values, nulls = _sum_columns(md, "num_values"), _null_count(md)
-                else:
-                    # chunk-level metadata is unreadable without keys:
-                    # null the chunk-derived sums (reference
-                    # ParquetSuite.scala:373-377 expects exactly this row)
-                    compressed = uncompressed = values = nulls = None
-                rows.append(
-                    (
-                        path,
-                        md.num_row_groups,
-                        compressed,
-                        uncompressed,
-                        md.num_rows,
-                        md.num_columns,
-                        values,
-                        nulls,
-                        md.created_by,
-                        str(md.schema).split("\n", 1)[-1],
-                        crypto.encryption,
-                        _key_values(md),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["filename", "blocks", "compressedBytes", "uncompressedBytes",
-                         "rows", "columns", "values", "nulls", "createdBy", "schema",
-                         "encryption", "keyValues"],
+    def rows(path):
+        md, crypto = _footer_guarded(path)
+        if crypto.encryption == "UNENCRYPTED":
+            compressed = _sum_columns(md, "total_compressed_size")
+            uncompressed = sum(
+                md.row_group(g).total_byte_size for g in range(md.num_row_groups)
             )
+            values, nulls = _sum_columns(md, "num_values"), _null_count(md)
+        else:
+            # chunk-level metadata is unreadable without keys: null the
+            # chunk-derived sums (reference ParquetSuite.scala:373-377
+            # expects exactly this row)
+            compressed = uncompressed = values = nulls = None
+        yield (
+            path,
+            md.num_row_groups,
+            compressed,
+            uncompressed,
+            md.num_rows,
+            md.num_columns,
+            values,
+            nulls,
+            md.created_by,
+            str(md.schema).split("\n", 1)[-1],
+            crypto.encryption,
+            _key_values(md),
+        )
 
-    schema = (
+    return map_rows(
+        _files_df(spark, paths, parallelism),
         "filename string, blocks int, compressedBytes long, uncompressedBytes long, "
         "rows long, columns int, `values` long, nulls long, createdBy string, "
-        "schema string, encryption string, keyValues map<string,string>"
+        "schema string, encryption string, keyValues map<string,string>",
+        rows,
     )
-    return files.mapInPandas(read, schema)
 
 
 def parquet_schema(
     spark: SparkSession, *paths: str, parallelism: Optional[int] = None
 ) -> DataFrame:
     """One row per leaf column of each file's parquet schema."""
-    files = _files_df(spark, paths, parallelism)
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                md, _crypto = _footer_guarded(path)
-                pq_schema = md.schema
-                for i in range(md.num_columns):
-                    col = pq_schema.column(i)
-                    rows.append(
-                        (
-                            path,
-                            col.name,
-                            list(col.path.split(".")),
-                            # pyarrow exposes def/rep levels, not the raw
-                            # repetition; derive the common cases
-                            "REPEATED" if col.max_repetition_level > 0
-                            else ("REQUIRED" if col.max_definition_level == 0 else "OPTIONAL"),
-                            col.physical_type,
-                            col.length if col.physical_type == "FIXED_LEN_BYTE_ARRAY" else None,
-                            None if col.converted_type in (None, "NONE") else str(col.converted_type),
-                            None if col.logical_type is None or col.logical_type.type == "NONE"
-                            else str(col.logical_type),
-                            True,
-                            col.physical_type,
-                            "TYPE_DEFINED_ORDER",
-                            col.max_definition_level,
-                            col.max_repetition_level,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["filename", "columnName", "columnPath", "repetition", "type",
-                         "length", "originalType", "logicalType", "isPrimitive",
-                         "primitiveType", "primitiveOrder", "maxDefinitionLevel",
-                         "maxRepetitionLevel"],
+    def rows(path):
+        md, _crypto = _footer_guarded(path)
+        for i in range(md.num_columns):
+            col = md.schema.column(i)
+            yield (
+                path,
+                col.name,
+                list(col.path.split(".")),
+                # pyarrow exposes def/rep levels, not the raw repetition;
+                # derive the common cases
+                "REPEATED" if col.max_repetition_level > 0
+                else ("REQUIRED" if col.max_definition_level == 0 else "OPTIONAL"),
+                col.physical_type,
+                col.length if col.physical_type == "FIXED_LEN_BYTE_ARRAY" else None,
+                None if col.converted_type in (None, "NONE") else str(col.converted_type),
+                None if col.logical_type is None or col.logical_type.type == "NONE"
+                else str(col.logical_type),
+                True,
+                col.physical_type,
+                "TYPE_DEFINED_ORDER",
+                col.max_definition_level,
+                col.max_repetition_level,
             )
 
-    schema = (
+    return map_rows(
+        _files_df(spark, paths, parallelism),
         "filename string, columnName string, columnPath array<string>, "
         "repetition string, type string, length int, originalType string, "
         "logicalType string, isPrimitive boolean, primitiveType string, "
-        "primitiveOrder string, maxDefinitionLevel int, maxRepetitionLevel int"
+        "primitiveOrder string, maxDefinitionLevel int, maxRepetitionLevel int",
+        rows,
     )
-    return files.mapInPandas(read, schema)
 
 
 def parquet_blocks(
     spark: SparkSession, *paths: str, parallelism: Optional[int] = None
 ) -> DataFrame:
     """One row per row group (1-based ``block`` ordinal)."""
-    files = _files_df(spark, paths, parallelism)
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                md, crypto = _footer_guarded(path)
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    if crypto.encryption != "UNENCRYPTED":
-                        # chunk metadata unreadable: blockStart comes from
-                        # the plaintext RowGroup.file_offset, the rest of
-                        # the chunk-derived fields are null (reference
-                        # ParquetSuite.scala:388-391)
-                        rows.append(
-                            (path, g + 1, crypto.row_group_offsets[g], None,
-                             rg.total_byte_size, rg.num_rows, rg.num_columns,
-                             None, None)
-                        )
-                        continue
-                    cols = [rg.column(c) for c in range(rg.num_columns)]
-                    nulls, total = None, 0
-                    if all(c.statistics is not None and c.statistics.null_count is not None
-                           for c in cols):
-                        total = sum(c.statistics.null_count for c in cols)
-                        nulls = total
-                    rows.append(
-                        (
-                            path,
-                            g + 1,
-                            min(_chunk_start(c) for c in cols),
-                            sum(c.total_compressed_size for c in cols),
-                            rg.total_byte_size,
-                            rg.num_rows,
-                            rg.num_columns,
-                            sum(c.num_values for c in cols),
-                            nulls,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["filename", "block", "blockStart", "compressedBytes",
-                         "uncompressedBytes", "rows", "columns", "values", "nulls"],
+    def rows(path):
+        md, crypto = _footer_guarded(path)
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if crypto.encryption != "UNENCRYPTED":
+                # chunk metadata unreadable: blockStart comes from the
+                # plaintext RowGroup.file_offset, the rest of the
+                # chunk-derived fields are null (reference
+                # ParquetSuite.scala:388-391)
+                yield (path, g + 1, crypto.row_group_offsets[g], None,
+                       rg.total_byte_size, rg.num_rows, rg.num_columns, None, None)
+                continue
+            cols = [rg.column(c) for c in range(rg.num_columns)]
+            nulls = None
+            if all(c.statistics is not None and c.statistics.null_count is not None
+                   for c in cols):
+                nulls = sum(c.statistics.null_count for c in cols)
+            yield (
+                path,
+                g + 1,
+                min(_chunk_start(c) for c in cols),
+                sum(c.total_compressed_size for c in cols),
+                rg.total_byte_size,
+                rg.num_rows,
+                rg.num_columns,
+                sum(c.num_values for c in cols),
+                nulls,
             )
 
-    schema = (
+    return map_rows(
+        _files_df(spark, paths, parallelism),
         "filename string, block int, blockStart long, compressedBytes long, "
-        "uncompressedBytes long, rows long, columns int, `values` long, nulls long"
+        "uncompressedBytes long, rows long, columns int, `values` long, nulls long",
+        rows,
     )
-    return files.mapInPandas(read, schema)
 
 
 def parquet_block_columns(
     spark: SparkSession, *paths: str, parallelism: Optional[int] = None
 ) -> DataFrame:
     """One row per column chunk of each row group."""
-    files = _files_df(spark, paths, parallelism)
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                md, crypto = _footer_guarded(path)
-                if crypto.encryption != "UNENCRYPTED":
-                    # column paths come from the (plaintext) schema; every
-                    # chunk-level field is unreadable → null, with the
-                    # per-chunk encrypted flag from the footer scan
-                    # (reference ParquetSuite.scala:392-397)
-                    for g in range(md.num_row_groups):
-                        for c in range(md.num_columns):
-                            rows.append(
-                                (path, g + 1,
-                                 list(md.schema.column(c).path.split(".")),
-                                 None, None, None, crypto.is_encrypted(g, c),
-                                 None, None, None, None, None, None, None)
-                            )
-                    continue
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    for c in range(rg.num_columns):
-                        col = rg.column(c)
-                        stats = col.statistics
-                        rows.append(
-                            (
-                                path,
-                                g + 1,
-                                list(col.path_in_schema.split(".")),
-                                col.compression,
-                                col.physical_type,
-                                sorted(set(col.encodings)),
-                                False,
-                                None if stats is None else repr(stats.min),
-                                None if stats is None else repr(stats.max),
-                                _chunk_start(col),
-                                col.total_compressed_size,
-                                col.total_uncompressed_size,
-                                col.num_values,
-                                None if stats is None else stats.null_count,
-                            )
-                        )
-            yield pd.DataFrame(
-                rows,
-                columns=["filename", "block", "column", "codec", "type", "encodings",
-                         "encrypted", "minValue", "maxValue", "columnStart",
-                         "compressedBytes", "uncompressedBytes", "values", "nulls"],
-            )
+    def rows(path):
+        md, crypto = _footer_guarded(path)
+        if crypto.encryption != "UNENCRYPTED":
+            # column paths come from the (plaintext) schema; every
+            # chunk-level field is unreadable → null, with the per-chunk
+            # encrypted flag from the footer scan (reference
+            # ParquetSuite.scala:392-397)
+            for g in range(md.num_row_groups):
+                for c in range(md.num_columns):
+                    yield (path, g + 1, list(md.schema.column(c).path.split(".")),
+                           None, None, None, crypto.is_encrypted(g, c),
+                           None, None, None, None, None, None, None)
+            return
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            for c in range(rg.num_columns):
+                col = rg.column(c)
+                stats = col.statistics
+                yield (
+                    path,
+                    g + 1,
+                    list(col.path_in_schema.split(".")),
+                    col.compression,
+                    col.physical_type,
+                    sorted(set(col.encodings)),
+                    False,
+                    None if stats is None else repr(stats.min),
+                    None if stats is None else repr(stats.max),
+                    _chunk_start(col),
+                    col.total_compressed_size,
+                    col.total_uncompressed_size,
+                    col.num_values,
+                    None if stats is None else stats.null_count,
+                )
 
-    schema = (
+    return map_rows(
+        _files_df(spark, paths, parallelism),
         "filename string, block int, column array<string>, codec string, "
         "type string, encodings array<string>, encrypted boolean, "
         "minValue string, maxValue string, columnStart long, "
-        "compressedBytes long, uncompressedBytes long, `values` long, nulls long"
+        "compressedBytes long, uncompressedBytes long, `values` long, nulls long",
+        rows,
     )
-    return files.mapInPandas(read, schema)
 
 
 def _chunk_start(col) -> int:
@@ -435,59 +384,49 @@ def parquet_partitions(
         plan, "partition int, path string, size long, start long, length long"
     ).repartition(n)
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for part, path, size, start, length in pdf.itertuples(index=False):
-                md, crypto = _footer_guarded(path)
-                if crypto.encryption != "UNENCRYPTED":
-                    # split planning needs per-chunk starts/sizes, which are
-                    # unreadable without keys — the reference throws here
-                    # too (ParquetSuite.scala:398-400)
-                    raise ValueError(
-                        f"cannot compute partitions for parquet file with "
-                        f"encrypted column chunks: {path}"
-                    )
-                blocks = []
-                for g in range(md.num_row_groups):
-                    rg = md.row_group(g)
-                    cols = [rg.column(c) for c in range(rg.num_columns)]
-                    block_start = min(_chunk_start(c) for c in cols)
-                    compressed = sum(c.total_compressed_size for c in cols)
-                    mid = block_start + compressed // 2
-                    if start <= mid < start + length:
-                        blocks.append((rg, cols, compressed))
-                nulls = None
-                if all(c.statistics is not None and c.statistics.null_count is not None
-                       for _, cols, _ in blocks for c in cols):
-                    nulls = sum(c.statistics.null_count for _, cols, _ in blocks for c in cols)
-                rows.append(
-                    (
-                        int(part),
-                        int(start),
-                        int(start + length),
-                        int(length),
-                        len(blocks),
-                        sum(c for _, _, c in blocks),
-                        sum(rg.total_byte_size for rg, _, _ in blocks),
-                        sum(rg.num_rows for rg, _, _ in blocks),
-                        max((rg.num_columns for rg, _, _ in blocks), default=0),
-                        sum(c.num_values for _, cols, _ in blocks for c in cols),
-                        nulls,
-                        path,
-                        int(size),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["partition", "start", "end", "length", "blocks",
-                         "compressedBytes", "uncompressedBytes", "rows", "columns",
-                         "values", "nulls", "filename", "fileLength"],
+    def rows(part, path, size, start, length):
+        md, crypto = _footer_guarded(path)
+        if crypto.encryption != "UNENCRYPTED":
+            # split planning needs per-chunk starts/sizes, which are
+            # unreadable without keys — the reference throws here too
+            # (ParquetSuite.scala:398-400)
+            raise ValueError(
+                f"cannot compute partitions for parquet file with "
+                f"encrypted column chunks: {path}"
             )
+        blocks = []
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            cols = [rg.column(c) for c in range(rg.num_columns)]
+            block_start = min(_chunk_start(c) for c in cols)
+            compressed = sum(c.total_compressed_size for c in cols)
+            mid = block_start + compressed // 2
+            if start <= mid < start + length:
+                blocks.append((rg, cols, compressed))
+        nulls = None
+        if all(c.statistics is not None and c.statistics.null_count is not None
+               for _, cols, _ in blocks for c in cols):
+            nulls = sum(c.statistics.null_count for _, cols, _ in blocks for c in cols)
+        yield (
+            part,
+            start,
+            start + length,
+            length,
+            len(blocks),
+            sum(c for _, _, c in blocks),
+            sum(rg.total_byte_size for rg, _, _ in blocks),
+            sum(rg.num_rows for rg, _, _ in blocks),
+            max((rg.num_columns for rg, _, _ in blocks), default=0),
+            sum(c.num_values for _, cols, _ in blocks for c in cols),
+            nulls,
+            path,
+            size,
+        )
 
-    schema = (
+    return map_rows(
+        plan_df,
         "partition int, start long, end long, length long, blocks int, "
         "compressedBytes long, uncompressedBytes long, rows long, columns int, "
-        "`values` long, nulls long, filename string, fileLength long"
+        "`values` long, nulls long, filename string, fileLength long",
+        rows,
     )
-    return plan_df.mapInPandas(read, schema)

@@ -18,12 +18,12 @@ Spark's own FileIndex materializes on the driver), not row data.
 
 from __future__ import annotations
 
-from typing import Iterator, Optional, Tuple
+from typing import Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..utils import map_rows
 from .parquet_metadata import _files_df, _footer_guarded
 
 __all__ = ["file_column_ranges", "prune_files", "read_pruned"]
@@ -67,34 +67,21 @@ def file_column_ranges(
     numeric column — row-group stats folded to the file level, values
     as doubles.  ``has_stats`` is false when any row group lacks
     min/max for the column (the file must then always be kept)."""
-    col_name = column
 
-    def read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                md, crypto = _footer_guarded(path)
-                names = [md.schema.column(i).path for i in range(md.num_columns)]
-                try:
-                    idx = names.index(col_name)
-                except ValueError:
-                    raise ValueError(
-                        f"column {col_name!r} not found in {path}; has {names}"
-                    )
-                lo = hi = None
-                ok = crypto.encryption == "UNENCRYPTED"
-                n_rows = md.num_rows
-                if ok:
-                    ok, lo, hi = _fold_stats(md, idx)
-                rows.append((path, n_rows, ok, lo if ok else None, hi if ok else None))
-            yield pd.DataFrame(
-                rows, columns=["path", "n_rows", "has_stats", "min_value", "max_value"]
-            )
+    def rows(path):
+        md, crypto = _footer_guarded(path)
+        names = [md.schema.column(i).path for i in range(md.num_columns)]
+        if column not in names:
+            raise ValueError(f"column {column!r} not found in {path}; has {names}")
+        ok, lo, hi = False, None, None
+        if crypto.encryption == "UNENCRYPTED":
+            ok, lo, hi = _fold_stats(md, names.index(column))
+        yield path, md.num_rows, ok, lo, hi
 
-    return _files_df(spark, paths, parallelism).mapInPandas(
-        read,
-        "path string, n_rows long, has_stats boolean, "
-        "min_value double, max_value double",
+    return map_rows(
+        _files_df(spark, paths, parallelism),
+        "path string, n_rows long, has_stats boolean, min_value double, max_value double",
+        rows,
     )
 
 

@@ -393,3 +393,31 @@ def safe_union(
     for df in aligned[1:]:
         out = out.unionByName(df)
     return out
+
+
+def map_rows(df: DataFrame, schema: str, rows) -> DataFrame:
+    """``df`` mapped through ``rows(*values)``: called with each input
+    row's column values, it yields output tuples in the column order of
+    the DDL ``schema``.
+
+    For kernels whose per-row work is Python anyway (footer reads, blob
+    decodes): in ``mapInArrow``, each input batch becomes Python values
+    once and its output rows become one Arrow batch of ``schema``, with
+    no pandas frame in between."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+
+    def kernel(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            out = [r for values in zip(*batch.to_pydict().values()) for r in rows(*values)]
+            cols = list(zip(*out)) if out else [()] * len(arrow)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow
+            )
+
+    return df.mapInArrow(kernel, struct)

@@ -7,11 +7,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from spark_extension_spark.operators.similarity import (
+    _bucket_column,
     brute_force_topk,
+    cosine_scored_pairs,
     cosine_similarity,
     embedding_near_dup_pairs,
+    ivf_assignments,
+    project_embeddings,
     rp_lsh_topk,
     rp_planes,
+    semantic_decontam_flags,
 )
 
 
@@ -623,3 +628,134 @@ class TestSelfTuningKnobs:
         df = spark.createDataFrame(rows, ["vec_id", "embedding"])
         cents = fit_centroids(df, target_cell_size=100, seed=1)
         assert len(cents) == 3  # ceil(300/100)
+
+
+# ---------------------------------------------------------------------------
+# Kernel edge cases, pinned bit for bit.  Floats compare by ``float.hex``,
+# so any change to a kernel's arithmetic fails here, not only a change
+# large enough to leave the oracle's ulp band.
+# ---------------------------------------------------------------------------
+
+_EDGE_SCHEMA = "vec_id long, embedding array<float>"
+_EDGE_ROWS = [
+    (1, [0.3, -1.7, 2.25]),
+    (2, [1.1, 0.4, -0.6]),
+    (3, None),                      # null vector
+    (4, [0.0, 0.0, 0.0]),           # zero norm
+    (5, [0.5, None, 1.5]),          # null element: read as NaN, not an error
+    (6, [-2.0, 0.75, 0.1]),
+    (7, [float("inf"), 1.0, 0.0]),  # NaN once normalised
+]
+
+
+def _hex(x):
+    return None if x is None else float(x).hex()
+
+
+def _edge_cosine_pairs(df, spark):
+    a = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
+    pairs = a.crossJoin(b).where("id_a < id_b").repartition(8, "id_a")
+    out = cosine_scored_pairs(pairs, "va", "vb", ["id_a", "id_b"])
+    return {(r["id_a"], r["id_b"]): _hex(r["cosine"]) for r in out.collect()}
+
+
+def _edge_brute_force(df, spark):
+    # queries 3 (null) and 4 (zero norm) are dropped before the kernel
+    out = brute_force_topk(df, df.where("vec_id IN (1, 2, 3, 4)"), k=3)
+    return sorted(
+        (r["query_id"], r["vec_id"], _hex(r["cosine"]), r["rank"]) for r in out.collect()
+    )
+
+
+def _edge_buckets(df, spark):
+    out = _bucket_column(df, "embedding", rp_planes(6, 3))
+    return {r["vec_id"]: r["__bucket"] for r in out.collect()}
+
+
+def _edge_project(df, spark):
+    out = project_embeddings(df, 2, dim=3)
+    return {
+        r["vec_id"]: None if r["embedding"] is None else [_hex(x) for x in r["embedding"]]
+        for r in out.collect()
+    }
+
+
+def _edge_ivf(df, spark):
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
+    return sorted(
+        (r["vec_id"], r["__cell"]) for r in ivf_assignments(df, cents, n_probes=2).collect()
+    )
+
+
+def _edge_decontam(df, spark):
+    bench = spark.createDataFrame(
+        [(100, [0.3, -1.6, 2.2]), (101, [0.0, 0.0, 0.0]), (102, None)], _EDGE_SCHEMA
+    )
+    out = semantic_decontam_flags(df, bench, threshold=0.5)
+    return {
+        r["vec_id"]: (_hex(r["max_benchmark_cosine"]), r["contaminated"])
+        for r in out.collect()
+    }
+
+
+_EDGE = {  # kernel: (runner, output on the edge rows)
+    "brute_force": (_edge_brute_force, [
+        (1, 2, "-0x1.d2b12267bf2a3p-2", 2),
+        (1, 6, "-0x1.169e980069370p-2", 1),
+        (2, 1, "-0x1.d2b12267bf2a3p-2", 1),
+        (2, 6, "-0x1.64cd119555b34p-1", 2),
+    ]),
+    "buckets": (_edge_buckets, {
+        1: "101111", 2: "011100", 3: None, 4: "000000", 5: "000000",
+        6: "100011", 7: "011100",
+    }),
+    "cosine_pairs": (_edge_cosine_pairs, {
+        **{(a, b): None for a in range(1, 8) for b in range(a + 1, 8)},
+        (1, 2): "-0x1.d2b12267bf2a3p-2",
+        (1, 6): "-0x1.169e980069370p-2",
+        (2, 6): "-0x1.64cd119555b33p-1",
+    }),
+    "decontam": (_edge_decontam, {
+        1: ("0x1.ffe9734a8403cp-1", True),
+        2: ("-0x1.cfaf830bbf662p-2", False),
+        3: (None, False),
+        4: (None, False),
+        5: (None, False),
+        6: ("-0x1.1476e58975f7bp-2", False),
+        7: (None, False),
+    }),
+    "ivf": (_edge_ivf, [
+        (1, 0), (1, 2), (2, 0), (2, 1), (4, 0), (4, 1), (5, 0), (5, 1),
+        (6, 1), (6, 2), (7, 0), (7, 1),
+    ]),
+    # NaN projections (the null element) come back as null elements
+    "project": (_edge_project, {
+        1: ["0x1.6a09e0bfcc232p-3", "-0x1.6a09e0bfcc232p-3"],
+        2: ["-0x1.d6a679515d637p-1", "0x1.d6a679515d637p-1"],
+        3: None,
+        4: ["0x0.0p+0", "0x0.0p+0"],
+        5: [None, None],
+        6: ["0x1.01f3da92ba865p+1", "-0x1.01f3da92ba865p+1"],
+        7: ["-inf", "inf"],
+    }),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_EDGE))
+def test_kernel_edge_cases_bit_exact(spark, kernel):
+    run, expected = _EDGE[kernel]
+    # 8 hash partitions for 7 rows: at least one kernel task is empty
+    df = spark.createDataFrame(_EDGE_ROWS, _EDGE_SCHEMA).repartition(8, "vec_id")
+    assert run(df, spark) == expected
+
+
+@pytest.mark.parametrize("kernel", sorted(_EDGE))
+def test_kernel_rejects_ragged_batch(spark, kernel):
+    # one partition, so one batch holds vectors of 3, 2 and 4 elements:
+    # 9 values reshape to 3 x 3 without complaint, misaligning rows 5 and 6
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (5, [1.0, 2.0]), (6, [0.5, 0.25, 1.0, 2.0])], _EDGE_SCHEMA
+    ).coalesce(1)
+    with pytest.raises(Exception, match="ValueError"):
+        _EDGE[kernel][0](df, spark)
