@@ -56,6 +56,10 @@ __all__ = [
 
 _TOKEN_PATTERN = "[a-z0-9]+"
 
+# bpe_train checkpoints the re-symbolized vocabulary once at least this
+# many merges have been applied since the last checkpoint
+_CHECKPOINT_EVERY = 8
+
 
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) over the normalized token stream — the one corpus
@@ -329,7 +333,6 @@ def bpe_train(
     n_merges: int,
     text_col: str = "text",
     min_pair_count: int = 2,
-    checkpoint_every: int = 8,
     batch_size: int = 8,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus; returns the merge
@@ -356,10 +359,11 @@ def bpe_train(
     previous state's top-K (disjoint pairs usually keep their counts).
     ``batch_size=1`` forces the classic loop exactly.
 
-    Lineage is truncated via ``localCheckpoint`` roughly every
-    ``checkpoint_every`` merges (the re-symbolized vocabulary would
-    otherwise chain ``n_merges`` projections).  Training stops early
-    when no pair reaches ``min_pair_count``.
+    Lineage is truncated via ``localCheckpoint`` after the first batch
+    that brings the merges since the last checkpoint to 8 or more (the
+    re-symbolized vocabulary would otherwise chain ``n_merges``
+    projections); no checkpoint follows the batch that ends training.
+    Training stops early when no pair reaches ``min_pair_count``.
 
     Determinism: winner by (count desc, sym_a asc, sym_b asc) — a pure
     function of the corpus, verified against a reference Python BPE in
@@ -381,11 +385,10 @@ def bpe_train(
 
     merges: List[Tuple[int, str, str, str]] = []
     current = vocab
-    # lag-1 cycling: each batch rewrites only the previous vocabulary,
-    # and the result is the driver-side merge list, so the final
-    # generation is releasable too — the loop leaves no checkpoint
-    # storage behind
-    cycler = LocalCheckpointCycler(spark, lag=1)
+    # each batch rewrites only the previous vocabulary, and the result
+    # is the driver-side merge list, so the final generation is
+    # releasable too — the loop leaves no checkpoint storage behind
+    cycler = LocalCheckpointCycler(spark)
     since_ckpt = 0
     guess: List[Tuple[str, str]] = []  # first job: bootstrap, 1 merge
     # ADAPTIVE guess depth (round-13): `cap` is the live guess length —
@@ -519,11 +522,7 @@ def bpe_train(
             # the final vocabulary is never read again (the result is
             # the driver-side merge list), so don't pay a checkpoint
             # job when the batch just completed training
-            if (
-                checkpoint_every
-                and since_ckpt >= int(checkpoint_every)
-                and len(merges) < int(n_merges)
-            ):
+            if since_ckpt >= _CHECKPOINT_EVERY and len(merges) < int(n_merges):
                 current = cycler.checkpoint(current)
                 since_ckpt = 0
     finally:

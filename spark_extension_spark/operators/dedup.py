@@ -557,7 +557,7 @@ def simhash(
 # "max_iterations", "converged"}) — converged=False entries record
 # blown iteration budgets just before the RuntimeError raises.  The
 # iteration count is what the convergence-check amortization actually
-# paid for — the label algorithm checks only every `check_every`
+# paid for — the label loop checks only every `check_every`
 # steps, so the recorded number is an upper bound on the graph
 # diameter rounded up to the batch size.  Process-global; never
 # consulted by library code.  Bounded drop-oldest at _CC_STATS_MAX so
@@ -661,16 +661,16 @@ def _min_label_ranks(n: int, a, b) -> Tuple["np.ndarray", int]:
             parent = jumped
 
 
-def _cc_local(sym: DataFrame, algorithm: str, max_iterations: int) -> DataFrame:
+def _cc_local(sym: DataFrame, max_iterations: int) -> DataFrame:
     """Connected components of a small symmetric edge set ``sym``
     (see :data:`_CC_LOCAL_MAX_EDGES`), computed on the driver: one
     ``toArrow()`` job, a numpy union-find, and ``createDataFrame``.
     Labels are bit-identical to the loops' (EXACTNESS.md): ids are
     ranked in Arrow sort order, which :func:`_cc_local_admits` limits to
     types Spark orders the same way, so the smallest rank is Spark's
-    smallest id.  A null id links nothing; under ``label`` its row takes
-    its non-null neighbours' smallest label (null when it has none), and
-    under ``star`` a null label, as each loop gives it."""
+    smallest id.  A null id links nothing; its row takes its non-null
+    neighbours' smallest label (null when it has none), as the loop
+    gives it."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -689,7 +689,7 @@ def _cc_local(sym: DataFrame, algorithm: str, max_iterations: int) -> DataFrame:
     rank, out_ids = pa.array(labels), ids
     if table["src"].null_count:
         nbrs = labels[b[(a < 0) & (b >= 0)]]
-        null_rank = int(nbrs.min()) if nbrs.size and algorithm == "label" else None
+        null_rank = int(nbrs.min()) if nbrs.size else None
         rank = pa.concat_arrays([rank, pa.array([null_rank], pa.int64())])
         out_ids = pa.concat_arrays([ids, pa.nulls(1, ids.type)])
     dtype = sym.schema["src"].dataType
@@ -742,8 +742,8 @@ def _cc_label_propagation(
     failure recomputes.  (``persist`` caches data but keeps the full
     lineage.)  The ``cycler`` frees each superseded checkpoint
     generation as the next one lands (each batch reads only the
-    previous labels, so lag 1).  The returned labels are a projection
-    of the final checkpoint, which the caller keeps live."""
+    previous labels).  The returned labels are a projection of the
+    final checkpoint, which the caller keeps live."""
     from pyspark.sql import Observation
 
     labels = None
@@ -778,95 +778,8 @@ def _cc_label_propagation(
     _record_cc_stats("label", max_iterations, max_iterations, converged=False)
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "
-        f"iterations — pathological chain graph; use a larger limit "
-        f"or algorithm='star'"
-    )
-
-
-def _cc_star(
-    sym: DataFrame, max_iterations: int, cycler: LocalCheckpointCycler
-) -> DataFrame:
-    """Alternating large-star / small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond").  Converges in
-    O(log^2 n) rounds on ANY graph — the escape hatch for adversarial
-    long-chain graphs where label propagation needs diameter rounds.
-
-    Invariant maintained on the working edge set: edges are kept
-    directed high→low (``src > dst``), so each round is two
-    (aggregate-min + join + filter) passes and a distinct.  Every round
-    ends in ``localCheckpoint(eager=True)`` — each round references the
-    previous edge set ~4×, so without lineage truncation the plan grows
-    as 4^rounds and plan analysis OOMs the driver (``persist`` does not
-    truncate lineage).  The result, ``nodes ⋈ work``, is checkpointed
-    too (job ``:result``): its lineage otherwise reaches ``sym``, which
-    the caller unpersists.
-    """
-    # lag 3: checkpoints land as w0, lg1, s1, lg2, s2, …, and the
-    # convergence delta after ck(s_r) still joins s_r against the
-    # previous round's work set s_{r-1} — two generations back at that
-    # moment — so the newest THREE generations must stay live; freeing
-    # at lag 3 only ever drops lg_{r-1} / s_{r-2}, both dead by then
-    ck = cycler.checkpoint
-    # high→low orientation; drop self-loops
-    with append_job_description("connected_components:star0"):
-        work = ck(
-            sym.where(F.col("src") != F.col("dst"))
-            .select(
-                F.greatest("src", "dst").alias("u"),
-                F.least("src", "dst").alias("v"),
-            )
-            .distinct()
-        )
-    nodes = sym.select(F.col("src").alias("id")).distinct()
-    for round_ in range(max_iterations):
-        with append_job_description(f"connected_components:star{round_ + 1}"):
-            # -- large-star: for every node n, connect strictly-larger
-            #    neighbours to m(n) = min over Γ(n) ∪ {n}
-            nbrs = work.union(work.select(F.col("v").alias("u"),
-                                          F.col("u").alias("v")))
-            mins = (
-                nbrs.groupBy("u")
-                .agg(F.min("v").alias("__mv"))
-                .select("u", F.least("__mv", "u").alias("m"))
-            )
-            large = (
-                nbrs.join(mins, "u")
-                .where(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            )
-            # -- small-star on the large-star output (still high→low):
-            #    connect all ≤ neighbours (and self) of n to the minimum
-            lg = ck(large.where(F.col("u") != F.col("v")).distinct())
-            smins = lg.groupBy("u").agg(F.min("v").alias("m"))
-            small = ck(
-                lg.join(smins, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .union(smins.select("u", F.col("m").alias("v")))
-                .where(F.col("u") != F.col("v"))
-                .distinct()
-            )
-            # converged when the edge set is stable (star edges fixed)
-            delta = (
-                small.join(work, ["u", "v"], "left_anti").limit(1).count()
-                + work.join(small, ["u", "v"], "left_anti").limit(1).count()
-            )
-        work = small
-        if delta == 0:
-            _record_cc_stats("star", round_ + 1, max_iterations)
-            # stars: every non-root points straight at its component
-            # minimum; roots (the minima) have no outgoing edge
-            with append_job_description("connected_components:result"):
-                return ck(
-                    nodes.join(work, nodes["id"] == work["u"], "left")
-                    .select(
-                        "id",
-                        F.coalesce(F.col("v"), F.col("id")).alias("cluster_id"),
-                    )
-                )
-    _record_cc_stats("star", max_iterations, max_iterations, converged=False)
-    raise RuntimeError(
-        f"connected_components(star) did not converge in "
-        f"{max_iterations} rounds"
+        f"iterations — a graph of diameter d needs d + 1 label steps; "
+        f"raise max_iterations (and check_every, to take fewer batches)"
     )
 
 
@@ -876,7 +789,6 @@ def connected_components(
     dst: str = "id_b",
     max_iterations: int = 50,
     check_every: int = 3,
-    algorithm: str = "label",
     unpersist_handle: Optional[UnpersistHandle] = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list: one row per
@@ -888,7 +800,7 @@ def connected_components(
     (both directions plus one self-loop per node) has at most
     ``_CC_LOCAL_MAX_EDGES`` rows and the ids are integers or dates, it
     is collected with ``toArrow()`` and labelled by a numpy union-find,
-    with the same labels either algorithm gives (jobs ``:edges`` and
+    with the same labels the loop gives (jobs ``:edges`` and
     ``:local``).  Everything below about batches, checkpoints and
     ``max_iterations``/``check_every`` applies to the distributed loop
     that larger edge sets and other id types run; the driver-side path
@@ -899,10 +811,9 @@ def connected_components(
     checkpoint.  A consumer that runs several actions on a large result
     should persist it.
 
-    ``algorithm='label'`` (default): min-label propagation — each step
-    is one equi-join + one min-aggregate keyed by node id; steps needed
-    = graph diameter (near-dup graphs are piles of small cliques —
-    single digits).  Convergence is detected from a filter-count over
+    The loop is min-label propagation — each step is one equi-join +
+    one min-aggregate keyed by node id; steps needed = graph diameter
+    (near-dup graphs are piles of small cliques — single digits).  Convergence is detected from a filter-count over
     the checkpointed step output (labels are monotone non-increasing),
     judged on each batch's LAST step alone so the batch that reaches
     the fixpoint also proves it, and only every ``check_every`` steps,
@@ -910,19 +821,12 @@ def connected_components(
     Batch jobs are ``ceil((diameter + 1) / check_every)``; the default
     3 covers the common clique-pile shape (diameter ≤ 2) in ONE batch
     at the cost of at most 2 no-op steps past the fixpoint — on a
-    diameter-heavy graph prefer a larger ``check_every`` (fewer driver
-    syncs) or ``algorithm='star'``.  Iteration state is
-    ``localCheckpoint``-ed once per batch to keep lineage bounded; on a
-    fault-tolerance-critical cluster job, set a checkpoint dir and swap
-    in reliable ``checkpoint()``.  Its jobs are labelled ``:edges`` and
+    diameter-heavy graph raise ``max_iterations`` above the diameter and
+    prefer a larger ``check_every`` (fewer driver syncs).  Iteration
+    state is ``localCheckpoint``-ed once per batch to keep lineage
+    bounded; on a fault-tolerance-critical cluster job, set a checkpoint
+    dir and swap in reliable ``checkpoint()``.  Its jobs are labelled ``:edges`` and
     ``:batch{i}``, appended to the caller's own description.
-
-    ``algorithm='star'``: alternating large-star / small-star
-    contraction, O(log^2 n) rounds on any graph — use for adversarial
-    long-chain graphs where diameter-many label steps would be slow.
-    Its jobs are labelled ``:edges``, ``:star0`` (orienting the edge
-    set), ``:star{r}`` for round r, and ``:result`` (checkpointing the
-    labels).
 
     The (possibly expensive) upstream ``edges`` pipeline is read
     exactly once: symmetrization explodes each edge into both
@@ -942,10 +846,6 @@ def connected_components(
     """
     # checked before any Spark work: a bad argument must not first run
     # the upstream pair pipeline
-    if algorithm not in ("label", "star"):
-        raise ValueError(
-            f"unknown algorithm {algorithm!r}: expected 'label' or 'star'"
-        )
     if check_every < 1:
         raise ValueError(f"check_every must be >= 1, got {check_every}")
     if max_iterations < 1:
@@ -960,10 +860,9 @@ def connected_components(
     # and (dst, dst): a label step then carries every node's own label
     # through the same join as its neighbours' (one join + one
     # aggregate per step, a plan linear in the step count — see
-    # _cc_label_propagation); _cc_star drops them with its src != dst
-    # filter.  Hash-partitioned on src ONCE: every label step joins on
-    # src (an arbitrary layout would reshuffle the full edge list into
-    # the join EVERY step).
+    # _cc_label_propagation).  Hash-partitioned on src ONCE: every label
+    # step joins on src (an arbitrary layout would reshuffle the full
+    # edge list into the join EVERY step).
     both_dirs = F.explode(
         F.array(*[
             F.struct(F.col(a).alias("src"), F.col(b).alias("dst"))
@@ -987,14 +886,10 @@ def connected_components(
     )
     with append_job_description("connected_components:edges"):
         n = sym.count()  # force once: later consumers read the warm cache
-    cycler = LocalCheckpointCycler(
-        edges.sparkSession, lag=3 if algorithm == "star" else 1
-    )
+    cycler = LocalCheckpointCycler(edges.sparkSession)
     try:
         if n <= _CC_LOCAL_MAX_EDGES and _cc_local_admits(sym.schema["src"].dataType):
-            out = _cc_local(sym, algorithm, max_iterations)
-        elif algorithm == "star":
-            out = _cc_star(sym, max_iterations, cycler)
+            out = _cc_local(sym, max_iterations)
         else:
             out = _cc_label_propagation(sym, max_iterations, check_every, cycler)
     except BaseException:
@@ -1003,10 +898,9 @@ def connected_components(
         raise
     finally:
         sym.unpersist()
-    # the newest generation backs the returned labels' lineage and
+    # the live generation backs the returned labels' lineage and
     # cannot be freed here; the caller's handle frees it when done (the
     # driver-side path checkpoints nothing, so its callback frees nothing)
-    cycler.release_superseded()
     if unpersist_handle is not None:
         unpersist_handle.add_callback(cycler.release)
     return out

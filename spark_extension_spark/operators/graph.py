@@ -10,11 +10,13 @@ Execution shape per iteration (the thing that must hold at 10^10
 edges): ONE equi-join (ranks onto edges, keyed by source) + ONE
 aggregate (contributions keyed by destination) + a 1-row broadcast
 (dangling mass).  No driver-side collection of anything wider than the
-dangling-mass scalar; iteration state is ``localCheckpoint``-ed every
-round by default — each round references the previous state 2-3 times,
-so any sparser cadence recomputes b^c rounds of work between
-checkpoints (measured 87 s -> 7 s on the sf0.1 k-core gate going from
-every-4 to every-1).
+dangling-mass scalar.  Every iterative loop here (pagerank, k_core,
+label_propagation) ``localCheckpoint``-s its state after every round
+but the last — each round references the previous state 2-3 times,
+so a sparser cadence recomputes b^c rounds of work between checkpoints
+(measured 87 s -> 7 s on the sf0.1 k-core gate going from every-4 to
+every-1) — and keeps one generation live
+(:class:`~spark_extension_spark.utils.LocalCheckpointCycler`).
 
 Determinism: per-destination contribution sums and the dangling mass
 run in DECIMAL(38,20) — order-independent, so ranks are bit-identical
@@ -47,7 +49,6 @@ def pagerank(
     dst: str = "dst",
     iterations: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 1,
     unpersist_handle: Optional[UnpersistHandle] = None,
 ) -> DataFrame:
     """PageRank over a directed edge list: (``id``, ``rank``) after
@@ -104,20 +105,19 @@ def pagerank(
     # (each round reads only the previous ranks), so live checkpoint
     # storage stays at one generation across any iteration count; the
     # final generation backs the returned DataFrame and is left live
-    cycler = LocalCheckpointCycler(e.sparkSession, lag=1)
+    cycler = LocalCheckpointCycler(e.sparkSession)
     from pyspark.sql import Observation
 
     # The dangling mass is a 1-row aggregate over the PREVIOUS ranks.
-    # When the previous round ended in a checkpoint, that exact sum is
-    # folded into the checkpoint's Observation (the k_core pattern) and
-    # arrives here as a plain Python double — the dangling subtree
-    # (filter + decimal aggregate + broadcast build) then vanishes from
-    # this round's plan entirely.  The observed expression is the SAME
-    # order-independent decimal(38,20) sum cast to double inside the
-    # JVM, so the literal is bit-identical to what the broadcast row
-    # carried.  Rounds whose predecessor did not checkpoint (sparser
-    # checkpoint cadences, and round 0 over the un-materialized seed)
-    # keep the in-plan broadcast path.
+    # Every round but the last ends in a checkpoint, and that exact sum
+    # is folded into the checkpoint's Observation (the k_core pattern)
+    # and arrives in the next round as a plain Python double — the
+    # dangling subtree (filter + decimal aggregate + broadcast build)
+    # then vanishes from that round's plan entirely.  The observed
+    # expression is the SAME order-independent decimal(38,20) sum cast
+    # to double inside the JVM, so the literal is bit-identical to what
+    # the broadcast row carried.  The in-plan broadcast serves round 0
+    # only, over the un-materialized seed.
     observed_dang = None
     for i in range(int(iterations)):
         contrib = (
@@ -148,8 +148,7 @@ def pagerank(
             ).alias("rank"),
             "__n",
         )
-        observed_dang = None
-        if checkpoint_every and (i + 1) % int(checkpoint_every) == 0 and i + 1 < iterations:
+        if i + 1 < iterations:
             obs = Observation()
             ranks = cycler.checkpoint(
                 ranks.observe(
@@ -336,34 +335,12 @@ def degrees_from_canonical(und: DataFrame) -> DataFrame:
     return ends.groupBy("id").agg(F.count(F.lit(1)).cast("long").alias("degree"))
 
 
-def _kcore_exit_metrics():
-    """The early-exit guard metrics k_core folds into each checkpoint's
-    Observation: the surviving edge count plus an order-independent
-    edge-set hash-sum (a retried, metric-inflated count cannot also
-    reproduce the previous SET's hash aggregate).  Module-level seam so
-    the guard's isolated cost can be A/B-measured."""
-    return [
-        F.count(F.lit(1)).alias("n"),
-        # bit_xor: order-independent like the former decimal(20,0)
-        # hash-SUM but pure int64 — no decimal path and no overflow at
-        # ANY edge count (the sum form's ANSI bound was ~10^10 edges).
-        # XOR cancels duplicated rows, but the exit also requires the
-        # COUNT to match and the monotonicity tripwire distrusts any
-        # count rise, so a retry-inflated observation still cannot pass.
-        # A/B-measured (5 interleaved clean-steal rounds): the guard —
-        # either form — costs nothing over a count-only exit; the r12
-        # floor delta (1.04 -> 1.29 s) was host drift, not the guard.
-        F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))).alias("h"),
-    ]
-
-
 def k_core(
     edges: DataFrame,
     k: int,
     rounds: int = 10,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     unpersist_handle: Optional[UnpersistHandle] = None,
 ) -> DataFrame:
     """Nodes of the ``k``-core (the maximal subgraph where every node
@@ -384,8 +361,8 @@ def k_core(
     (a path graph peels one node per pass) need more rounds; raise
     ``rounds`` when the survivor count hasn't stabilized.
 
-    Lineage is truncated with ``localCheckpoint`` every
-    ``checkpoint_every`` passes — the iterative-plan guard shared
+    Lineage is truncated with ``localCheckpoint`` before the first pass
+    and after every pass but the last — the iterative-plan guard shared
     with :func:`pagerank` and connected components.  Peeling is
     monotone (passes only REMOVE edges), so a pass that leaves the
     edge COUNT unchanged left the edge SET unchanged and every further
@@ -408,9 +385,9 @@ def k_core(
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     cur = undirected_edges(edges, src, dst)
-    # lag-1 cycling: each pass reads only the previous edge set, so the
-    # superseded checkpoint is freed as soon as the next one lands
-    cycler = LocalCheckpointCycler(edges.sparkSession, lag=1)
+    # each pass reads only the previous edge set, so the superseded
+    # checkpoint is freed as soon as the next one lands
+    cycler = LocalCheckpointCycler(edges.sparkSession)
     # The early exit reads (count, xxhash64-sum) of the surviving edge
     # set from an Observation.  Observed metrics can OVER-count when
     # stages/tasks retry on a real cluster, so the exit is guarded two
@@ -423,18 +400,28 @@ def k_core(
     # mode (exactly-once observation) count-equality alone is already
     # a theorem-backed fixed-point proof; the extra guard costs two
     # aggregate expressions on a job the loop pays anyway.
-    _exit_metrics = _kcore_exit_metrics()
-    prev = None
+    exit_metrics = [
+        F.count(F.lit(1)).alias("n"),
+        # bit_xor: order-independent like the former decimal(20,0)
+        # hash-SUM but pure int64 — no decimal path and no overflow at
+        # ANY edge count (the sum form's ANSI bound was ~10^10 edges).
+        # XOR cancels duplicated rows, but the exit also requires the
+        # COUNT to match and the monotonicity tripwire distrusts any
+        # count rise, so a retry-inflated observation still cannot pass.
+        # A/B-measured (5 interleaved clean-steal rounds): the guard —
+        # either form — costs nothing over a count-only exit; the r12
+        # floor delta (1.04 -> 1.29 s) was host drift, not the guard.
+        F.bit_xor(F.xxhash64(F.col("u"), F.col("v"))).alias("h"),
+    ]
     metrics_trusted = True
-    if checkpoint_every:
-        # checkpoint the canonical edge set BEFORE the loop: pass 0
-        # consumes it three times (two degree projections + the
-        # semi-join base), and un-truncated each consumer re-runs the
-        # distinct-union over the source — the sibling iteratives
-        # (pagerank, LPA) pin their base frames the same way
-        obs0 = Observation()
-        cur = cycler.checkpoint(cur.observe(obs0, *_exit_metrics))
-        prev = (obs0.get["n"], obs0.get["h"])
+    # checkpoint the canonical edge set BEFORE the loop: pass 0
+    # consumes it three times (two degree projections + the semi-join
+    # base), and un-truncated each consumer re-runs the distinct-union
+    # over the source — the sibling iteratives (pagerank, LPA) pin
+    # their base frames the same way
+    obs0 = Observation()
+    cur = cycler.checkpoint(cur.observe(obs0, *exit_metrics))
+    prev = (obs0.get["n"], obs0.get["h"])
     for r in range(int(rounds)):
         deg = degrees_from_canonical(cur)
         keep = deg.where(F.col("degree") >= int(k)).select("id")
@@ -442,11 +429,11 @@ def k_core(
             cur.join(keep.select(F.col("id").alias("u")), "u", "left_semi")
             .join(keep.select(F.col("id").alias("v")), "v", "left_semi")
         )
-        if checkpoint_every and (r + 1) % int(checkpoint_every) == 0 and r + 1 < rounds:
+        if r + 1 < rounds:
             obs = Observation()
-            cur = cycler.checkpoint(cur.observe(obs, *_exit_metrics))
+            cur = cycler.checkpoint(cur.observe(obs, *exit_metrics))
             n_h = (obs.get["n"], obs.get["h"])
-            if prev is not None and n_h[0] > prev[0]:
+            if n_h[0] > prev[0]:
                 metrics_trusted = False  # retry inflation: counts rose
             if metrics_trusted and n_h == prev:
                 break  # fixed point: every remaining pass is a no-op
@@ -500,7 +487,6 @@ def label_propagation(
     iterations: int = 5,
     src: str = "src",
     dst: str = "dst",
-    checkpoint_every: int = 1,
     unpersist_handle: Optional[UnpersistHandle] = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over the
@@ -531,8 +517,8 @@ def label_propagation(
     ``min(struct(-count, label))`` is the identical argmax — count
     desc, label asc on ties — as a plain aggregate, for any orderable
     id type).  State is
-    ``localCheckpoint``-ed every ``checkpoint_every`` rounds to
-    truncate lineage.  The canonical edge list is persisted (it feeds
+    ``localCheckpoint``-ed after every round but the last to truncate
+    lineage.  The canonical edge list is persisted (it feeds
     every round); pass an ``unpersist_handle`` to release it.
     """
     if iterations < 1:
@@ -552,8 +538,8 @@ def label_propagation(
         "id", F.col("id").alias("label")
     )
 
-    # lag-1 cycling (each round votes from the previous labels only)
-    cycler = LocalCheckpointCycler(edges.sparkSession, lag=1)
+    # each round votes from the previous labels only
+    cycler = LocalCheckpointCycler(edges.sparkSession)
     for i in range(int(iterations)):
         votes = (
             both.join(labels.withColumnRenamed("id", "u"), "u")
@@ -578,7 +564,7 @@ def label_propagation(
             )
             .select("id", F.col("__b.label").alias("label"))
         )
-        if checkpoint_every and (i + 1) % int(checkpoint_every) == 0 and i + 1 < iterations:
+        if i + 1 < iterations:
             labels = cycler.checkpoint(labels)
 
     # the last live generation backs the returned labels' lineage and

@@ -576,7 +576,14 @@ def project_embeddings(
     output bit-identical across batch sizes, partitionings, and a
     sequential-fold SQL oracle (a BLAS matmul's pairwise summation is
     none of those).  64 vectorized adds per batch ≈ matmul speed for
-    the dims that matter here."""
+    the dims that matter here.
+
+    Every vector must have ``dim`` elements (inferred from the first
+    non-null vector when not given); any other length raises
+    ``ValueError``.  A null vector projects to null.  A null or NaN
+    input element makes the row's projection NaN, returned as null
+    elements; an infinite component passes through as ``±inf`` (null
+    where opposite infinities meet)."""
     import numpy as np
 
     if out_dim <= 0:
@@ -600,6 +607,11 @@ def project_embeddings(
             V, ok = _vectors(batch.column(vec_name))
             acc = np.zeros((len(V), planes.shape[1]), dtype=np.float64)
             if ok.any():
+                if V.shape[1] != dim:
+                    raise ValueError(
+                        f"vectors have dim {V.shape[1]} but project_embeddings "
+                        f"expects dim {dim}"
+                    )
                 for d in range(planes.shape[0]):  # fixed-order fold over input dims
                     acc += V[:, d, None] * planes[d]
                 acc *= scale

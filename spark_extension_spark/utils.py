@@ -210,7 +210,7 @@ class NoopUnpersistHandle(UnpersistHandle):
 
 class LocalCheckpointCycler:
     """Frees superseded ``localCheckpoint`` generations inside iterative
-    driver loops (connected components, PageRank, k-core, LPA, …).
+    driver loops (connected components, PageRank, k-core, LPA, BPE).
 
     ``localCheckpoint(eager=True)`` truncates lineage by caching the
     step's internal RDD, but that cache is owned by the RDD, not the
@@ -219,9 +219,9 @@ class LocalCheckpointCycler:
     accumulates R generations of checkpointed state until the
     ContextCleaner garbage-collects the driver-side references — at
     cluster scale that is R × |state| of executor storage held for no
-    reason.  This cycler tracks the persistent-RDD ids each checkpoint
-    creates and unpersists generation N-1 as soon as generation N is
-    materialized, so live checkpoint storage stays O(1) generations.
+    reason.  This cycler keeps exactly one generation live: generation
+    N-1 is unpersisted as soon as generation N is materialized, since
+    every loop here reads only the previous round's state.
 
     Freeing a locally-checkpointed RDD makes it unrecomputable (its
     lineage is gone), so only *superseded* generations are ever freed:
@@ -230,61 +230,31 @@ class LocalCheckpointCycler:
     call it only once every consumer of the last checkpoint is done
     (e.g. from an ``UnpersistHandle`` callback the caller fires).
 
-    Id tracking diffs ``JavaSparkContext.getPersistentRDDs`` around the
-    checkpoint call, which assumes the driver is not concurrently
-    persisting RDDs on another thread during the loop — true for every
-    operator here (single-threaded driver iteration).
+    A generation is the RDD the checkpointed frame's plan reads (its
+    ``LogicalRDD``), read off the returned frame itself, so a checkpoint
+    another thread takes meanwhile is never mistaken for this loop's.
     """
 
-    def __init__(self, spark: SparkSession, lag: int = 1) -> None:
-        """``lag`` = how many checkpoint generations stay live: 1 frees
-        N-1 at N (state feeds only the next step); larger windows suit
-        loops that still read older generations after writing a new one
-        (star-contraction's convergence delta needs lag 3 — see
-        ``_cc_star``)."""
-        if lag < 1:
-            raise ValueError(f"lag must be >= 1, got {lag}")
+    def __init__(self, spark: SparkSession) -> None:
         self._jsc = spark.sparkContext._jsc
-        self._live: list = []  # oldest first, at most `lag` generations
-        self._lag = int(lag)
-
-    def _persistent_ids(self) -> set:
-        return {int(k) for k in self._jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _free(self, ids: set) -> None:
-        jmap = self._jsc.getPersistentRDDs()
-        for rid in ids:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
+        self._live: Optional[int] = None  # RDD id of the live generation
 
     def checkpoint(self, df: DataFrame) -> DataFrame:
-        """Eagerly localCheckpoint ``df``, then free the generation that
-        fell out of the ``lag`` window."""
-        before = self._persistent_ids()
+        """Eagerly localCheckpoint ``df``, then free the previous
+        generation."""
         ck = df.localCheckpoint(eager=True)
-        self._live.append(self._persistent_ids() - before)
-        if len(self._live) > self._lag:
-            self._free(self._live.pop(0))
+        rid = ck._jdf.queryExecution().logical().rdd().id()
+        self.release()
+        self._live = rid
         return ck
 
     def release(self) -> None:
-        """Free every still-live generation (see class docstring for when)."""
-        for gen in self._live:
-            self._free(gen)
-        self._live = []
-
-    def release_superseded(self) -> None:
-        """Free every live generation EXCEPT the newest.  Use on a loop's
-        success path when the returned DataFrame's lineage still references
-        the final checkpoint: freeing that generation would make the result
-        unrecomputable (lost cache blocks, or a fired unpersist handle,
-        would then fail any re-run with a missing-checkpoint-block error),
-        so it stays live and falls to the ContextCleaner with the loop's
-        references — O(1) state, not a leak class."""
-        for gen in self._live[:-1]:
-            self._free(gen)
-        del self._live[:-1]
+        """Free the live generation (see class docstring for when)."""
+        if self._live is not None:
+            jrdd = self._jsc.getPersistentRDDs().get(self._live)
+            if jrdd is not None:
+                jrdd.unpersist(False)
+            self._live = None
 
 
 _NUMERIC_RANK = {

@@ -149,42 +149,19 @@ def test_connected_components_empty(spark):
     assert connected_components(edges).count() == 0
 
 
-def test_connected_components_star_matches_label(spark, monkeypatch):
-    from spark_extension_spark import connected_components
-    from spark_extension_spark.operators import dedup
-    from spark_extension_spark.operators.dedup import cc_stats_log
-
-    # chain + clique + isolated pair; both algorithms must agree exactly,
-    # on the driver-side path and on the distributed loops
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6),
-         (10, 11), (10, 12), (11, 12), (20, 21)],
-        ["id_a", "id_b"],
-    )
-    bound = dedup._CC_LOCAL_MAX_EDGES
-    for local in (True, False):
-        monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", bound if local else 0)
-        cc_stats_log(clear=True)
-        label = {r["id"]: r["cluster_id"]
-                 for r in connected_components(edges, algorithm="label").collect()}
-        star = {r["id"]: r["cluster_id"]
-                for r in connected_components(edges, algorithm="star").collect()}
-        want = ["local", "local"] if local else ["label", "star"]
-        assert [e["algorithm"] for e in cc_stats_log(clear=True)] == want
-        assert label == star
-        assert star[6] == 1 and star[12] == 10 and star[21] == 20
-
-
-def test_connected_components_star_long_chain(spark, cc_loop):
+def test_connected_components_long_chain(spark, cc_loop):
     from spark_extension_spark import connected_components
 
-    # diameter-100 chain: label propagation would need ~100 steps; star
-    # contraction converges in O(log^2 n) rounds well inside the limit
-    # (the loop runs: the driver-side path ignores max_iterations)
+    # diameter-100 chain: the label loop needs 101 steps to reach and
+    # prove the fixpoint.  A budget below that raises with the remedy;
+    # raising max_iterations (in 6 batches of 20) is that remedy (the
+    # loop runs: the driver-side path ignores max_iterations)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], ["id_a", "id_b"]
     )
-    got = connected_components(edges, algorithm="star", max_iterations=15)
+    with pytest.raises(RuntimeError, match="raise max_iterations"):
+        connected_components(edges, max_iterations=20, check_every=20)
+    got = connected_components(edges, max_iterations=120, check_every=20)
     assert {r["cluster_id"] for r in got.collect()} == {0}
     assert got.count() == 101
 
@@ -237,15 +214,11 @@ def test_connected_components_stats_log(spark, cc_loop):
         [(5, 4), (4, 3), (3, 2), (2, 1)], ["id_a", "id_b"]
     )
     connected_components(edges, check_every=2).count()
-    star_edges = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
-    connected_components(star_edges, algorithm="star").count()
 
-    log = cc_stats_log(clear=True)
-    assert [e["algorithm"] for e in log] == ["label", "star"]
-    label, star = log
+    (label,) = cc_stats_log(clear=True)
+    assert label["algorithm"] == "label"
     # the chain needs 4 label steps; the zero-change batch lands at 6
     assert label["iterations"] == 6 and label["converged"]
-    assert 1 <= star["iterations"] <= star["max_iterations"]
     assert cc_stats_log() == []  # drained
 
     # a blown iteration budget is recorded too (converged=False), just
@@ -331,9 +304,8 @@ def test_connected_components_match_union_find(spark, monkeypatch):
     # seeded random multigraphs (repeated and reversed edges, input
     # self-loops, a node that only loops to itself, chains longer than
     # a batch): labels equal a union-find reference on the driver-side
-    # path and on the loop at every batch size, equal the star
-    # algorithm, and the label loop stops at the first batch whose last
-    # step is a no-op
+    # path and on the loop at every batch size, and the loop stops at
+    # the first batch whose last step is a no-op
     from spark_extension_spark import connected_components
     from spark_extension_spark.operators import dedup
     from spark_extension_spark.operators.dedup import cc_stats_log
@@ -359,12 +331,9 @@ def test_connected_components_match_union_find(spark, monkeypatch):
             assert got == want
             batches = -(-(steps + 1) // check_every)
             assert entry["iterations"] == batches * check_every, (seed, check_every)
-        for algorithm in ("label", "star"):
-            got, entry = run(edges, "id_a long, id_b long", True, algorithm=algorithm)
-            assert got == want, (seed, algorithm)
-            assert entry["converged"] and entry["iterations"] >= 1
-        star, _ = run(edges, "id_a long, id_b long", False, algorithm="star")
-        assert star == want, seed
+        got, entry = run(edges, "id_a long, id_b long", True)
+        assert got == want, seed
+        assert entry["converged"] and entry["iterations"] >= 1
 
     # string ids (the loop only): ordered as strings, by UTF-8 bytes
     # ("z" < "é", "Z" < "ä")
@@ -373,8 +342,8 @@ def test_connected_components_match_union_find(spark, monkeypatch):
     for check_every in (1, 2, 3):
         got, _ = run(words, "id_a string, id_b string", False, check_every=check_every)
         assert got == _union_find_labels(words)
-    # a null id links nothing and takes its neighbours' smallest label
-    # (the star algorithm gives it a null label instead, on either path)
+    # a null id links nothing and takes its neighbours' smallest label,
+    # or null when it has none
     nulls = [(5, 4), (4, 3), (None, 5), (9, None), (9, 8), (None, None), (7, 7)]
     want = {3: 3, 4: 3, 5: 3, 7: 7, 8: 8, 9: 8, None: 3}
     for check_every in (1, 2, 3):
@@ -382,8 +351,6 @@ def test_connected_components_match_union_find(spark, monkeypatch):
         assert got == _union_find_labels(nulls) == want
     assert run(nulls, "id_a long, id_b long", True)[0] == want
     for local in (True, False):
-        star, _ = run(nulls, "id_a long, id_b long", local, algorithm="star")
-        assert star == {**want, None: None}
         assert run([(None, None)], "id_a long, id_b long", local)[0] == {None: None}
 
 
@@ -459,7 +426,6 @@ def test_connected_components_local_path(spark, monkeypatch):
 @pytest.mark.parametrize(
     "kw, match",
     [
-        ({"algorithm": "lable"}, "unknown algorithm"),
         ({"check_every": 0}, "check_every must be >= 1"),
         ({"max_iterations": 0}, "max_iterations must be >= 1"),
     ],
@@ -519,26 +485,6 @@ def test_connected_components_job_labels(spark, cc_loop):
     assert labels == {
         f"caller - connected_components:{phase}"
         for phase in ("edges", "batch1", "batch2", "batch3")
-    }
-
-    # the star algorithm names its orientation job star0, then one
-    # label per contraction round, and checkpoints its labels as result
-    from spark_extension_spark import cc_stats_log
-
-    cc_stats_log(clear=True)
-    before = set(_job_descriptions(spark))
-    with job_description("caller"):
-        connected_components(edges, algorithm="star")
-    (stats,) = cc_stats_log(clear=True)
-    rounds = stats["iterations"]
-    assert rounds >= 2
-    labels = {
-        d for j, d in _job_descriptions(spark).items() if j not in before
-    }
-    assert labels == {
-        f"caller - connected_components:{phase}"
-        for phase in ["edges", "result"]
-        + [f"star{r}" for r in range(rounds + 1)]
     }
 
 
@@ -1022,22 +968,55 @@ def test_pagerank_dangling_mass_redistributed(spark):
     assert abs(sum(pr.values()) - 1.0) < 1e-9
 
 
+def _pagerank_replay(edges, iterations, d=0.85):
+    """Exact Python replay of :func:`pagerank`: each contribution term
+    and each dangling rank rounds half-up to 20 decimal places (Spark's
+    double -> decimal(38,20) cast), the terms sum exactly, the sum
+    converts to the nearest double, and the combination runs in double
+    in the operator's order."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def dec(x):
+        return Decimal(repr(x)).quantize(Decimal("1e-20"), ROUND_HALF_UP)
+
+    nodes = {v for e in edges for v in e}
+    out_deg = dict.fromkeys(nodes, 0)
+    for s, _ in edges:
+        out_deg[s] += 1
+    n = float(len(nodes))
+    rank = dict.fromkeys(nodes, 1.0 / n)
+    for _ in range(iterations):
+        terms = {}
+        for s, t in edges:
+            terms.setdefault(t, []).append(dec(rank[s] / float(out_deg[s])))
+        dang = float(sum((dec(rank[v]) for v in nodes if out_deg[v] == 0), Decimal(0)))
+        rank = {
+            v: (1.0 - d) / n
+            + d * ((float(sum(terms[v])) if v in terms else 0.0) + dang / n)
+            for v in nodes
+        }
+    return rank
+
+
 def test_pagerank_observed_dangling_matches_inplan(spark):
-    # round-13: with checkpoint_every=1 the dangling mass rides each
-    # checkpoint's Observation and enters the next round as a literal;
-    # with sparser cadences the in-plan broadcast path is used for
-    # rounds whose predecessor did not checkpoint, and with
-    # checkpoint_every=0 it is used everywhere.  All cadences must be
-    # bit-identical (the observed literal IS the broadcast value).
+    # round 0 reads the dangling mass from an in-plan broadcast, every
+    # later round from the previous checkpoint's Observation as a
+    # literal; both must give the exact replay's ranks bit for bit, at
+    # one round (broadcast only) and over several
     from spark_extension_spark.operators.graph import pagerank
 
-    edges = spark.createDataFrame(
-        [(i, (i * 3) % 11) for i in range(30)] + [(11, 12)], ["src", "dst"]
-    )
-    a = sorted(map(tuple, pagerank(edges, iterations=5, checkpoint_every=1).collect()))
-    b = sorted(map(tuple, pagerank(edges, iterations=5, checkpoint_every=2).collect()))
-    c = sorted(map(tuple, pagerank(edges, iterations=5, checkpoint_every=0).collect()))
-    assert a == b == c
+    graphs = [
+        [(i, (i * 3) % 11) for i in range(30)] + [(11, 12)],
+        [(0, 1)],
+        # 40 edges; the chain 35 -> ... -> 40 ends in a dangling node
+        [(i, (i * 7) % 20) for i in range(35)] + [(i, i + 1) for i in range(35, 40)],
+    ]
+    for edges in graphs:
+        df = spark.createDataFrame(edges, ["src", "dst"])
+        for iterations in (1, 2, 5):
+            got = {r["id"]: r["rank"].hex() for r in pagerank(df, iterations=iterations).collect()}
+            want = {v: x.hex() for v, x in _pagerank_replay(edges, iterations).items()}
+            assert got == want, (edges[:3], iterations)
 
 
 def test_pagerank_partitioning_independent(spark):
@@ -1362,8 +1341,7 @@ class TestCheckpointLifecycle:
         grown = len(self._cached_ids(spark)) - before
         assert grown <= 3  # one final generation per call, nothing else
 
-    @pytest.mark.parametrize("algorithm", ["label", "star"])
-    def test_no_handle_result_survives_cache_loss(self, spark, algorithm):
+    def test_no_handle_result_survives_cache_loss(self, spark):
         # without a handle the result still rests on a live checkpoint,
         # so dropping whatever cache it has and re-running gives the same
         # rows, and no warning is given
@@ -1376,7 +1354,7 @@ class TestCheckpointLifecycle:
         )
         with _warnings.catch_warnings():
             _warnings.simplefilter("error", UserWarning)
-            out = connected_components(edges, algorithm=algorithm)
+            out = connected_components(edges)
         want = sorted(map(tuple, out.collect()))
         out.unpersist(True)
         assert sorted(map(tuple, out.collect())) == want

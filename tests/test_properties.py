@@ -318,12 +318,8 @@ def test_connected_components_matches_union_find(spark, edges):
     # bound 0 sends the edge set to the distributed loop
     for bound in (dedup._CC_LOCAL_MAX_EDGES, 0):
         with mock.patch.object(dedup, "_CC_LOCAL_MAX_EDGES", bound):
-            for algorithm in ("label", "star"):
-                got = {
-                    r["id"]: r["cluster_id"]
-                    for r in connected_components(df, algorithm=algorithm).collect()
-                }
-                assert got == want, f"{algorithm}, bound {bound}: {got} != {want}"
+            got = {r["id"]: r["cluster_id"] for r in connected_components(df).collect()}
+            assert got == want, f"bound {bound}: {got} != {want}"
 
 
 # -- as-of join vs pandas merge_asof ------------------------------------------

@@ -214,7 +214,7 @@ def test_local_checkpoint_cycler(spark):
         return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
 
     before = cached_ids()
-    cyc = LocalCheckpointCycler(spark, lag=1)
+    cyc = LocalCheckpointCycler(spark)
     cur = spark.range(100).withColumn("x", F.col("id"))
     for _ in range(4):
         cur = cyc.checkpoint(cur.withColumn("x", F.col("x") + 1))
@@ -226,23 +226,31 @@ def test_local_checkpoint_cycler(spark):
     assert cached_ids() <= before
 
 
-def test_local_checkpoint_cycler_lag_window(spark):
+def test_local_checkpoint_cycler_frees_only_its_own(spark):
+    # a checkpoint that lands while the cycler checkpoints (another
+    # thread's loop, say) is not one of its generations: the next
+    # generation must not free it
     from pyspark.sql import functions as F
 
     from spark_extension_spark.utils import LocalCheckpointCycler
 
-    import pytest
+    cls = type(spark.range(1))  # the classic DataFrame class on PySpark 4
+    orig = cls.localCheckpoint
+    other = []
 
-    with pytest.raises(ValueError):
-        LocalCheckpointCycler(spark, lag=0)
+    def racing(self, *args, **kwargs):
+        if not other:
+            other.append(orig(spark.range(7).withColumn("o", F.lit(1)), eager=True))
+        return orig(self, *args, **kwargs)
 
-    cyc = LocalCheckpointCycler(spark, lag=3)
-    gens = []
-    for i in range(5):
-        gens.append(cyc.checkpoint(spark.range(10).withColumn("g", F.lit(i))))
-    # the newest three generations must all still be readable (lag=3)
-    for g in gens[-3:]:
-        assert g.count() == 10
+    cyc = LocalCheckpointCycler(spark)
+    cls.localCheckpoint = racing
+    try:
+        cyc.checkpoint(spark.range(10))
+    finally:
+        cls.localCheckpoint = orig
+    assert cyc.checkpoint(spark.range(20)).count() == 20
+    assert other[0].collect() == [(i, 1) for i in range(7)]
     cyc.release()
 
 

@@ -522,6 +522,18 @@ def test_project_embeddings_null_vectors_row_preserving(spark):
     assert out[1] == clean[1] and out[3] == clean[3]
 
 
+def test_project_embeddings_rejects_wrong_dim(spark):
+    # a vector of any length but ``dim`` raises, naming both dims: a
+    # longer one would otherwise project its first ``dim`` components,
+    # a shorter one fail with numpy's IndexError
+    from spark_extension_spark.operators.similarity import project_embeddings
+
+    for vec in ([1.0, 2.0, 3.0, 400.0], [1.0, 2.0]):
+        df = spark.createDataFrame([(1, vec)], "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match=f"dim {len(vec)} but project_embeddings expects dim 3"):
+            project_embeddings(df, 2, dim=3).collect()
+
+
 def test_dim_inference_clear_errors(spark):
     from spark_extension_spark.operators.similarity import (
         ivf_topk,
